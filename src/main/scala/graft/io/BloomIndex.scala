@@ -101,13 +101,13 @@ object BloomIndex {
     // (larger bits) on the old dirs.  Validated INSIDE the publish
     // closure — it re-runs against the resolved head on every retry, so
     // a racing first declaration cannot slip a second, different one in
-    try Versioned.publish(spark, root, head => {
-      Versioned.bloomColOf(spark, root, head).foreach { case (c0, m0) =>
+    try Versioned.publish(spark, root, parent => {
+      parent.bloomDecl.foreach { case (c0, m0) =>
         require(c0 == bloomCol && m0 == bits,
           s"$root already keeps a bloom index on ($c0, $m0 bits); " +
             s"re-declaring ($bloomCol, $bits) would corrupt pruning")
       }
-      (if (head == 0) Seq.empty else Versioned.manifest(spark, root, head)) :+ rel
+      parent.dirs :+ rel
     },
       precomputedRows = Map(rel -> n),
       blooms = Some((bloomCol, bits, Map(rel -> entry))), op = "append")
@@ -145,7 +145,8 @@ object BloomIndex {
   private[io] def pruneDirsPoint(spark: SparkSession, root: String, v: Int,
       values: Seq[String]): Seq[String] = {
     require(values.nonEmpty, "empty probe set")
-    val (c, bits) = Versioned.bloomColOf(spark, root, v).getOrElse(
+    val rec = Versioned.recordAt(spark, root, v)
+    val (c, bits) = rec.bloomDecl.getOrElse(
       throw new IllegalArgumentException(s"$root has no bloom index"))
     require(!c.startsWith("_tok("),
       s"$root keeps a TOKEN index ($c); probe it with TextIndex.readToken")
@@ -153,12 +154,11 @@ object BloomIndex {
     val probes: Array[Array[Int]] = values.toDF("v")
       .select(positions(col("v"), bits).as("ps")).collect()
       .map(_.getSeq[Long](0).map(_.toInt).toArray)
-    val blooms = Versioned.dirBlooms(spark, root, v)
     def hits(d: String, entry: String): Boolean = {
       val bytes = loadBitset(spark, root, d, entry)
       probes.exists(_.forall(p => (bytes(p >> 3) & (1 << (p & 7))) != 0))
     }
-    Versioned.manifest(spark, root, v).filter(d => blooms.get(d).forall(hits(d, _)))
+    rec.dirs.filter(d => rec.bloom.get(d).forall(hits(d, _)))
   }
 
   private def readPointCanonical(spark: SparkSession, root: String, v: Int,

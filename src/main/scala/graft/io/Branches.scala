@@ -3,6 +3,7 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
+import scala.collection.immutable.ListMap
 
 /** Named BRANCHES on the versioned commit log — git-style refs over the
   * same write-once data dirs.
@@ -77,41 +78,45 @@ object Branches {
       throw new IllegalStateException(
         s"branch '$name' of $root has a fork pointer but no log — the stub of a " +
           "crashed create; run Branches.delete to clear it, then re-create")
-    val out = f.create(forkFile(b), false)
-    try out.write(s"""{"srcVersion":$at}""".getBytes("UTF-8")) finally out.close()
+    writePointer(spark, b, ForkPointer(at), overwrite = false)
     Versioned.cloneAt(spark, root, b, at)
     at
   }
 
-  private def writePointer(spark: SparkSession, b: String, json: String): Unit = {
-    val f = Versioned.fs(spark, forkFile(b))
-    val out = f.create(forkFile(b), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+  /** The fork pointer `fork.json` of a branch.  `srcVersion` is the
+    * parent version the branch was forked at (or last rebased onto — see
+    * [[rebase]]).  `forkLocalV` is the BRANCH-log version holding the
+    * clean fork snapshot: 1 for a created branch (the cloneAt record),
+    * the snapshot record a rebase published otherwise; everything
+    * [[merge]] compares against "the fork" reads this version, so
+    * rebases compose.  `rebasing` is a live rebase intent: the parent
+    * head it targets and the branch's pre-rebase head (`preHead`). */
+  private final case class ForkPointer(srcVersion: Int, forkLocalV: Int = 1,
+      rebasing: Option[(Int, Int)] = None)
+
+  private def writePointer(spark: SparkSession, b: String, ptr: ForkPointer,
+      overwrite: Boolean = true): Unit = {
+    val body = ListMap[String, Any]("srcVersion" -> ptr.srcVersion,
+      "forkLocalV" -> ptr.forkLocalV) ++ ptr.rebasing.map { case (src, pre) =>
+        "rebasing" -> ListMap("src" -> src, "preHead" -> pre) }
+    LogRecord.writeJson(Versioned.fs(spark, forkFile(b)), forkFile(b), body, overwrite)
   }
 
-  private def forkText(spark: SparkSession, root: String, name: String): String = {
+  private def pointerOf(spark: SparkSession, root: String, name: String): ForkPointer = {
     val p = forkFile(branchRoot(root, name))
     val f = Versioned.fs(spark, p)
     require(f.exists(p), s"branch '$name' of $root has no fork pointer")
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    val n = LogRecord.readJson(f, p)
+    if (!n.path("srcVersion").canConvertToInt) throw new IllegalStateException(
+      s"malformed fork pointer for branch '$name' of $root")
+    ForkPointer(n.get("srcVersion").asInt, n.path("forkLocalV").asInt(1),
+      Option(n.get("rebasing")).map(r => (r.path("src").asInt, r.path("preHead").asInt)))
   }
 
   /** The parent version branch `name` was forked at (or last rebased
     * onto — see [[rebase]]). */
   def forkVersion(spark: SparkSession, root: String, name: String): Int =
-    """"srcVersion":\s*(\d+)""".r.findFirstMatchIn(forkText(spark, root, name))
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"malformed fork pointer for branch '$name' of $root"))
-
-  /** The BRANCH-log version holding the clean fork snapshot: 1 for a
-    * created branch (the cloneAt record), the snapshot record a
-    * [[rebase]] published otherwise.  Everything [[merge]] compares
-    * against "the fork" reads this version, so rebases compose. */
-  private def forkLocalV(spark: SparkSession, root: String, name: String): Int =
-    """"forkLocalV":\s*(\d+)""".r.findFirstMatchIn(forkText(spark, root, name))
-      .map(_.group(1).toInt).getOrElse(1)
+    pointerOf(spark, root, name).srcVersion
 
   /** Head read of a branch (plain [[Versioned.readAt]] of its root). */
   def read(spark: SparkSession, root: String, name: String): DataFrame = {
@@ -152,10 +157,8 @@ object Branches {
         val head = Versioned.currentVersion(spark, b)
         val here: Set[String] =
           if (head == 0) Set.empty
-          else (Versioned.lowestVersion(spark, b, head) to head).flatMap { v =>
-            Versioned.manifest(spark, b, v) ++
-              Versioned.dvOf(spark, b, v).values.flatten
-          }.toSet
+          else (Versioned.lowestVersion(spark, b, head) to head)
+            .flatMap(Versioned.recordAt(spark, b, _).referencedDirs).toSet
         here ++ walk(b)
       }.toSet
     }
@@ -181,15 +184,18 @@ object Branches {
   def merge(spark: SparkSession, root: String, name: String): Int = {
     val rootN = norm(root)
     val b = branchRoot(root, name)
-    if (forkText(spark, root, name).contains(""""rebasing":"""))
+    val ptr = pointerOf(spark, root, name)
+    if (ptr.rebasing.isDefined)
       throw new MergeConflict(
         s"branch '$name' has an interrupted rebase; run Branches.rebase to heal, then merge")
-    val forkV = forkVersion(spark, root, name)
-    val fl = forkLocalV(spark, root, name)
+    val forkV = ptr.srcVersion
+    val fl = ptr.forkLocalV
     val bh = Versioned.currentVersion(spark, b)
     require(bh >= fl, s"branch '$name' of $root has no committed version")
-    val bDirs = Versioned.manifest(spark, b, bh)
-    val forkDirs = Versioned.manifest(spark, b, fl).toSet
+    val bRec = Versioned.recordAt(spark, b, bh)
+    val forkRec = Versioned.recordAt(spark, b, fl)
+    val bDirs = bRec.dirs
+    val forkDirs = forkRec.dirs.toSet
 
     // a branch dir is parent-inherited iff its manifest entry is an
     // absolute path into the parent's data/ (how cloneAt records them)
@@ -205,17 +211,15 @@ object Branches {
         s"branch '$name' carries parent-absolute dirs beyond its fork snapshot " +
           "(an interrupted rebase); run Branches.rebase to heal, then merge")
 
-    val bDv = Versioned.dvOf(spark, b, bh)
-    val bDvRows = Versioned.dvRowsOf(spark, b, bh)
-    val forkDv = Versioned.dvOf(spark, b, fl)
+    val bDv = bRec.dv
     // alters compare by EVENT KEYS (did the branch add its own schema
     // events?), not by full fragments: a rebase legitimately extends
     // post-fork events' dir sets with the branch's own dirs
+    val forkEvents = forkRec.alters.map(e => (e._1, e._2))
     val appendOnly =
       forkDirs.subsetOf(bDirs.toSet) &&
-        forkDirs.forall(d => bDv.get(d) == forkDv.get(d)) &&
-        Versioned.altersOf(spark, b, bh).map(e => (e._1, e._2)) ==
-          Versioned.altersOf(spark, b, fl).map(e => (e._1, e._2))
+        forkDirs.forall(d => bDv.get(d) == forkRec.dv.get(d)) &&
+        bRec.alters.map(e => (e._1, e._2)) == forkEvents
 
     // deletion-vector sidecars address rows by ABSOLUTE file path, so
     // they cannot ride the rename: each branch-local sidecar is REWRITTEN
@@ -257,43 +261,33 @@ object Branches {
       try {
       if (appendOnly) {
         moveAll()
-        val bStats = Versioned.dirStats(spark, b, bh)
-          .filter { case (d, _) => newDirs.contains(d) }
-        val bRows = Versioned.dirRows(spark, b, bh)
-          .filter { case (d, _) => newDirs.contains(d) }
-        val bSc = Versioned.statsColOf(spark, b, bh)
-        val bBloom = Versioned.bloomColOf(spark, b, bh)
-        val forkEvents = Versioned.altersOf(spark, b, fl).map(e => (e._1, e._2))
+        val fresh = newDirs.toSet
         val dvAdd: Map[String, (Seq[String], Long)] =
           carryDv.map { case (d, sides) =>
-            d -> (sides.map(rs), bDvRows.getOrElse(d, 0L)) }
-        Versioned.publishRecord(spark, rootN, head => {
-          val dirs = (if (head == 0) Seq.empty
-                      else Versioned.manifest(spark, rootN, head)) ++ newDirs
+            d -> (sides.map(rs), bRec.dvRows.getOrElse(d, 0L)) }
+        Versioned.publishRecord(spark, rootN, main => {
+          val dirs = main.dirs ++ newDirs
           // adopted dirs predate every parent alter made SINCE the fork:
           // they join those events' dir sets (events are append-only, so
           // the fork's events are a prefix of the parent's)
-          val mainEvents = Versioned.altersOf(spark, rootN, head)
           if (forkEvents.nonEmpty &&
-              mainEvents.take(forkEvents.size).map(e => (e._1, e._2)) != forkEvents)
+              main.alters.take(forkEvents.size).map(e => (e._1, e._2)) != forkEvents)
             throw new MergeConflict(
               s"parent $rootN rewrote schema history since the fork of '$name'")
-          val altersArg =
-            if (mainEvents.isEmpty) None
-            else Some(mainEvents.zipWithIndex.map { case ((c, t, ds), i) =>
-              val all = if (i < forkEvents.size) ds else ds ++ newDirs
-              s""""$c|$t":"${all.toSeq.sorted.mkString(",")}""""
-            }.mkString(","))
-          val sc = Versioned.statsColOf(spark, rootN, head)
-          val pre = if (sc.isDefined && sc == bSc) bStats else Map.empty[String, (Long, Long)]
-          val blooms = Versioned.bloomColOf(spark, rootN, head) match {
-            case Some((c, m)) if bBloom.contains((c, m)) =>
-              Some((c, m, Versioned.dirBlooms(spark, b, bh)
-                .filter { case (d, _) => newDirs.contains(d) }))
+          val alters = main.alters.zipWithIndex.map { case ((c, t, ds), i) =>
+            (c, t, if (i < forkEvents.size) ds else ds ++ newDirs) }
+          val pre =
+            if (main.statsCol.isDefined && main.statsCol == bRec.statsCol)
+              bRec.stats.filter { case (d, _) => fresh(d) }
+            else Map.empty[String, (Long, Long)]
+          val blooms = main.bloomDecl match {
+            case Some((c, m)) if bRec.bloomDecl.contains((c, m)) =>
+              Some((c, m, bRec.bloom.filter { case (d, _) => fresh(d) }))
             case _ => None
           }
-          (dirs, Versioned.extraFields(spark, rootN, head, dirs, None, "",
-            pre, altersArg, bRows, blooms, dvAdd))
+          Versioned.nextRecord(spark, rootN, main, dirs, precomputed = pre,
+            alters = Some(alters), blooms = blooms, dvAdd = dvAdd,
+            precomputedRows = bRec.rows.filter { case (d, _) => fresh(d) })
         }).get
       } else {
         // snapshot merge: the branch head replaces the parent wholesale,
@@ -302,15 +296,12 @@ object Branches {
           throw new MergeConflict(
             s"branch '$name' rewrote history and parent $rootN advanced past fork v$forkV")
         moveAll()
-        val dirs = bDirs.map(r)
-        // ONE serializer with every replay path (restore, clone): stats,
+        // ONE replay with every snapshot path (restore, clone): stats,
         // rows, sums, blooms, alters, checks, dv all carry remapped
-        val carried = Versioned.carryFieldsOf(spark, b, bh, bDirs, r, rs)
-        val ts = math.max(System.currentTimeMillis(),
-          Versioned.tsOf(spark, rootN, forkV))
-        Versioned.publishRecord(spark, rootN,
-          _ => (dirs, s""","ts":$ts$carried"""),
-          abortIf = head => head != forkV) match {
+        val carried = bRec.replay(r, rs).copy(ts = math.max(
+          System.currentTimeMillis(), Versioned.tsOf(spark, rootN, forkV)))
+        Versioned.publishRecord(spark, rootN, _ => carried,
+          abortIf = _.version != forkV) match {
           case Some(v) => v
           case None =>
             throw new MergeConflict(
@@ -367,8 +358,9 @@ object Branches {
   def rebase(spark: SparkSession, root: String, name: String): Int = {
     val rootN = norm(root)
     val b = branchRoot(root, name)
-    val forkV = forkVersion(spark, root, name)
-    val fl = forkLocalV(spark, root, name)
+    val ptr0 = pointerOf(spark, root, name)
+    val forkV = ptr0.srcVersion
+    val fl = ptr0.forkLocalV
     val bh0 = Versioned.currentVersion(spark, b)
     require(bh0 >= fl, s"branch '$name' of $root has no committed version")
     val head = Versioned.currentVersion(spark, rootN)
@@ -380,8 +372,7 @@ object Branches {
     // simply restarts from preHead, treating every later version as a
     // superseded artifact.  No guessing from manifest shapes — the
     // intent IS the recovery record.
-    val preHeadOpt = """"preHead":(\d+)""".r
-      .findFirstMatchIn(forkText(spark, root, name)).map(_.group(1).toInt)
+    val preHeadOpt = ptr0.rebasing.map(_._2)
     val bh = preHeadOpt match {
       case Some(p) =>
         require(p >= fl && p <= bh0,
@@ -396,7 +387,7 @@ object Branches {
         // loudly instead: the operator folds the stray commit back
         // (re-commit it on a fresh branch) or deletes it deliberately.
         ((p + 1) to bh0).foreach { v =>
-          if (!Versioned.recordTextOf(spark, b, v).contains(""""rebaseSnap":true"""))
+          if (!Versioned.recordAt(spark, b, v).rebaseSnap)
             throw new IllegalStateException(
               s"branch '$name' carries a non-rebase commit (v$v) made while a " +
                 s"rebase intent was live; healing would drop it — salvage v$v " +
@@ -406,33 +397,34 @@ object Branches {
       case None => bh0
     }
     if (head == forkV && preHeadOpt.isEmpty) return bh0 // already on main's head
-    val forkDirs = Versioned.manifest(spark, b, fl)
+    val forkRec = Versioned.recordAt(spark, b, fl)
+    val bRec = Versioned.recordAt(spark, b, bh)
+    val forkDirs = forkRec.dirs
     val forkSet = forkDirs.toSet
-    val bDirs = Versioned.manifest(spark, b, bh)
+    val bDirs = bRec.dirs
     if (!forkSet.subsetOf(bDirs.toSet))
       throw new MergeConflict(
         s"branch '$name' rewrote fork history; rebase replays appends and MOR deletes only")
-    val forkKeys = Versioned.altersOf(spark, b, fl).map(e => (e._1, e._2))
-    if (Versioned.altersOf(spark, b, bh).map(e => (e._1, e._2)) != forkKeys)
+    val forkKeys = forkRec.alters.map(e => (e._1, e._2))
+    if (bRec.alters.map(e => (e._1, e._2)) != forkKeys)
       throw new MergeConflict(
         s"branch '$name' added schema events of its own; rebase cannot replay alters")
     val added = bDirs.filterNot(forkSet)
     require(added.forall(d => !d.startsWith("/") && !d.contains(":/")),
       s"branch '$name' carries foreign absolute dirs; rebase cannot adopt them")
 
-    val bDv = Versioned.dvOf(spark, b, bh)
-    val bDvRows = Versioned.dvRowsOf(spark, b, bh)
-    val forkDv = Versioned.dvOf(spark, b, fl)
-    val forkDvRows = Versioned.dvRowsOf(spark, b, fl)
-    val mDirs = Versioned.manifest(spark, rootN, head)
+    val bDv = bRec.dv
+    val bDvRows = bRec.dvRows
+    val mainRec = Versioned.recordAt(spark, rootN, head)
+    val mDirs = mainRec.dirs
     val mSet = mDirs.toSet
-    val mDv = Versioned.dvOf(spark, rootN, head)
+    val mDv = mainRec.dv
     val dvAtFork = Versioned.dvOf(spark, rootN, forkV)
     def relOf(d: String) = d.stripPrefix(s"$rootN/")
     // the branch's vector SUFFIX per inherited dir (vectors accumulate
     // append-only until a rewrite, which the subset check excluded)
     val deltas: Map[String, (Seq[String], Long)] = forkDirs.flatMap { d =>
-      val pre = forkDv.getOrElse(d, Seq.empty)
+      val pre = forkRec.dv.getOrElse(d, Seq.empty)
       val post = bDv.getOrElse(d, Seq.empty)
       if (post.size <= pre.size) None
       else {
@@ -444,16 +436,14 @@ object Branches {
           throw new MergeConflict(s"main changed deletion vectors on $relD since " +
             s"the fork; branch '$name' deltas would double-count")
         Some(d -> (post.drop(pre.size),
-          bDvRows.getOrElse(d, 0L) - forkDvRows.getOrElse(d, 0L)))
+          bDvRows.getOrElse(d, 0L) - forkRec.dvRows.getOrElse(d, 0L)))
       }
     }.toMap
 
     // INTENT first: any crash from here on is healed by the next rebase
     // restarting from preHead (see the healing block above); the old
     // srcVersion/forkLocalV ride along so the retry sees the same fork
-    val prevPointer = forkText(spark, root, name)
-    writePointer(spark, b,
-      s"""{"srcVersion":$forkV,"forkLocalV":$fl,"rebasing":{"src":$head,"preHead":$bh}}""")
+    writePointer(spark, b, ptr0.copy(rebasing = Some((head, bh))))
 
     // publish 1: the clean fork snapshot of main@head — the cloneAt
     // record, on the branch's own log.  Both rebase publishes are
@@ -470,17 +460,17 @@ object Branches {
     // the intent MUST stay on failure: the snapshot record is already on
     // the branch log, and only the heal path knows to supersede it.
     val abs: String => String = d => Versioned.dataPath(rootN, d)
-    val carried = Versioned.carryFieldsOf(spark, rootN, head, mDirs, abs, abs)
-    val ts = math.max(System.currentTimeMillis(), Versioned.tsOf(spark, b, bh0))
+    val snapshot = mainRec.replay(abs, abs).copy(rebaseSnap = true,
+      ts = math.max(System.currentTimeMillis(), Versioned.tsOf(spark, b, bh0)))
     val vf =
       try Versioned.publishRecord(spark, b,
-        h => {
-          if (h != bh0) throw new MergeConflict(
+        parent => {
+          if (parent.version != bh0) throw new MergeConflict(
             s"branch '$name' advanced during its rebase")
-          (mDirs.map(abs), s""","ts":$ts$carried,"rebaseSnap":true""")
+          snapshot
         }).get
       catch { case e: Throwable =>
-        try writePointer(spark, b, prevPointer)
+        try writePointer(spark, b, ptr0)
         catch { case r: Throwable => e.addSuppressed(r) }
         throw e
       }
@@ -491,25 +481,21 @@ object Branches {
         // publish 2: snapshot + the branch's replayed delta.  Added dirs
         // carry their recorded stats/rows/blooms; they also join main's
         // post-fork schema events' dir sets (they predate those events).
-        val bStats = Versioned.dirStats(spark, b, bh)
-          .filter { case (d, _) => added.contains(d) }
-        val bRows = Versioned.dirRows(spark, b, bh)
-          .filter { case (d, _) => added.contains(d) }
-        val mainEvents = Versioned.altersOf(spark, b, vf)
+        val fresh = added.toSet
+        val bStats = bRec.stats.filter { case (d, _) => fresh(d) }
+        val bRows = bRec.rows.filter { case (d, _) => fresh(d) }
+        // the snapshot just published carries main@head's events and
+        // bloom declaration
+        val mainEvents = snapshot.alters
         if (forkKeys.nonEmpty &&
             mainEvents.take(forkKeys.size).map(e => (e._1, e._2)) != forkKeys)
           throw new MergeConflict(
             s"parent $rootN rewrote schema history since the fork of '$name'")
-        val altersArg =
-          if (mainEvents.isEmpty) None
-          else Some(mainEvents.zipWithIndex.map { case ((c, t, ds), i) =>
-            val all = if (i < forkKeys.size) ds else ds ++ added
-            s""""$c|$t":"${all.toSeq.sorted.mkString(",")}""""
-          }.mkString(","))
-        val bloomArg = Versioned.bloomColOf(spark, b, vf) match {
-          case Some((c, m)) if Versioned.bloomColOf(spark, b, bh).contains((c, m)) =>
-            val e = Versioned.dirBlooms(spark, b, bh)
-              .filter { case (d, _) => added.contains(d) }
+        val alters = mainEvents.zipWithIndex.map { case ((c, t, ds), i) =>
+          (c, t, if (i < forkKeys.size) ds else ds ++ added) }
+        val bloomArg = snapshot.bloomDecl match {
+          case Some((c, m)) if bRec.bloomDecl.contains((c, m)) =>
+            val e = bRec.bloom.filter { case (d, _) => fresh(d) }
             if (e.isEmpty) None else Some((c, m, e))
           case _ => None
         }
@@ -517,27 +503,29 @@ object Branches {
           added.flatMap(d => bDv.get(d).map(s => d -> (s, bDvRows.getOrElse(d, 0L))))
         val snapAbs = mDirs.map(abs)
         Versioned.publishRecord(spark, b,
-          h => {
-            // h == vf in the quiet case.  h > vf means an ordinary
-            // branch commit landed BETWEEN the two rebase publishes — it
+          parent => {
+            // parent.version == vf in the quiet case.  A later head means
+            // an ordinary branch commit landed BETWEEN the two rebase
+            // publishes — it
             // read vf's manifest (the clean snapshot) as its parent, so
             // appending the replayed delta to ITS manifest folds it in
             // instead of wedging the branch: an append race costs
             // nothing.  Only a mid-rebase REWRITE of snapshot dirs
             // (which would orphan the delta's DV targets) still
             // conflicts — the intent stays and the heal path surfaces it.
-            val baseDirs = Versioned.manifest(spark, b, h)
+            val baseDirs = parent.dirs
             if (!snapAbs.forall(baseDirs.contains)) throw new MergeConflict(
               s"branch '$name' rewrote the rebase snapshot mid-rebase; " +
                 "positional deltas cannot replay")
             val dirs = baseDirs ++ added.filterNot(baseDirs.toSet)
-            (dirs, Versioned.extraFields(spark, b, h, dirs, None,
-              ""","rebaseSnap":true""", bStats, altersArg, bRows, bloomArg, dvAdd))
+            Versioned.nextRecord(spark, b, parent, dirs, precomputed = bStats,
+              alters = Some(alters), precomputedRows = bRows, blooms = bloomArg,
+              dvAdd = dvAdd).copy(rebaseSnap = true)
           }).get
       }
     // final pointer LAST: clearing the rebasing intent is the rebase's
     // commit point — until it lands, merge refuses and rebase heals
-    writePointer(spark, b, s"""{"srcVersion":$head,"forkLocalV":$vf}""")
+    writePointer(spark, b, ForkPointer(head, vf))
     merged
   }
 

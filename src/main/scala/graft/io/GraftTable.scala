@@ -123,18 +123,17 @@ object GraftTable {
     * a satisfying row. */
   def pruneDirs(spark: SparkSession, root: String, v: Int,
       filters: Seq[Filter]): Seq[String] = {
-    val dirs = Versioned.manifest(spark, root, v)
+    val rec = Versioned.recordAt(spark, root, v)
+    val dirs = rec.dirs
     if (filters.isEmpty) return dirs
-    val declared = Versioned.statsColsOf(spark, root, v)
-    val legacy = Versioned.statsColOf(spark, root, v)
-      .filter(c => Versioned.Z2.findFirstIn(c).isEmpty)
+    val declared = rec.statsCols
+    val legacy = rec.statsCol.filter(c => Versioned.Z2.findFirstIn(c).isEmpty)
     val bounds = boundsOf(filters).filter { case (c, _) =>
       declared.contains(c) || legacy.contains(c) }
     val zoneKeep =
       if (bounds.isEmpty) dirs
       else {
-        val m = Versioned.dirMstats(spark, root, v)
-        val st = Versioned.dirStats(spark, root, v)
+        val (m, st) = (rec.mstats, rec.stats)
         dirs.filter { d =>
           bounds.forall { case (c, (lo, hi)) =>
             val e = if (declared.contains(c)) m.get((c, d)) else st.get(d)
@@ -142,7 +141,7 @@ object GraftTable {
           }
         }
       }
-    Versioned.bloomColOf(spark, root, v)
+    rec.bloomDecl
       .filter(bc => !bc._1.startsWith("_tok("))
       .flatMap(bc => pointsOf(filters, bc._1)) match {
         case Some(vals) =>
@@ -231,8 +230,8 @@ private[io] class GraftTableRelation(override val sqlContext: SQLContext,
   }
 
   override def sizeInBytes: Long = {
-    val dirs = Versioned.manifest(spark, root, v)
-    val bytes = Versioned.dirBytes(spark, root, v)
+    val rec = Versioned.recordAt(spark, root, v)
+    val (dirs, bytes) = (rec.dirs, rec.bytes)
     if (dirs.nonEmpty && dirs.forall(bytes.contains)) dirs.map(bytes).sum
     else super.sizeInBytes
   }

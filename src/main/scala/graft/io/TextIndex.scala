@@ -63,13 +63,13 @@ object TextIndex {
     // declaration compatibility re-validated per publish retry (see
     // BloomIndex.commitAppendBloom): a racing first declaration cannot
     // slip a different one in
-    try Versioned.publish(spark, root, head => {
-      Versioned.bloomColOf(spark, root, head).foreach { case (c0, m0) =>
+    try Versioned.publish(spark, root, parent => {
+      parent.bloomDecl.foreach { case (c0, m0) =>
         require(c0 == decl && m0 == bits,
           s"$root already keeps a bloom index on ($c0, $m0 bits); " +
             s"re-declaring ($decl, $bits) would corrupt pruning")
       }
-      (if (head == 0) Seq.empty else Versioned.manifest(spark, root, head)) :+ rel
+      parent.dirs :+ rel
     },
       precomputedRows = Map(rel -> n),
       blooms = Some((decl, bits, Map(rel -> entry))), op = "append")
@@ -87,7 +87,8 @@ object TextIndex {
       terms: Seq[String], requireAll: Boolean = true): (Seq[String], String) = {
     require(terms.nonEmpty, "empty probe set")
     terms.foreach(requireTerm)
-    val (decl, bits) = Versioned.bloomColOf(spark, root, v).getOrElse(
+    val rec = Versioned.recordAt(spark, root, v)
+    val (decl, bits) = rec.bloomDecl.getOrElse(
       throw new IllegalArgumentException(s"$root has no token index"))
     val textCol = decl match {
       case Decl(c) => c
@@ -99,14 +100,12 @@ object TextIndex {
     val probes: Array[Array[Int]] = terms.toDF("t")
       .select(BloomIndex.positions(col("t"), bits).as("ps")).collect()
       .map(_.getSeq[Long](0).map(_.toInt).toArray)
-    val blooms = Versioned.dirBlooms(spark, root, v)
     def hits(d: String, entry: String): Boolean = {
       val bytes = BloomIndex.loadBitset(spark, root, d, entry)
       def one(ps: Array[Int]) = ps.forall(p => (bytes(p >> 3) & (1 << (p & 7))) != 0)
       if (requireAll) probes.forall(one) else probes.exists(one)
     }
-    (Versioned.manifest(spark, root, v)
-      .filter(d => blooms.get(d).forall(hits(d, _))), textCol)
+    (rec.dirs.filter(d => rec.bloom.get(d).forall(hits(d, _))), textCol)
   }
 
   private def readPruned(spark: SparkSession, root: String, v: Int,

@@ -78,11 +78,8 @@ object TxnCatalog {
     val mine = tables.map { case (n, r) => n -> norm(r) }
     createLocks.computeIfAbsent(catN, _ => new Object).synchronized {
       if (!f.exists(tf)) {
-        val body = mine.toSeq.sortBy(_._1)
-          .map { case (n, r) => s""""$n":"$r"""" }.mkString(",")
         val tmp = new org.apache.hadoop.fs.Path(s"$catN/.tables-${java.util.UUID.randomUUID()}")
-        val out = f.create(tmp, false)
-        try out.write(s"{$body}".getBytes("UTF-8")) finally out.close()
+        LogRecord.writeJson(f, tmp, scala.collection.immutable.TreeMap.from(mine))
         val fc = org.apache.hadoop.fs.FileContext.getFileContext(
           tf.toUri, spark.sparkContext.hadoopConfiguration)
         try fc.rename(tmp, tf) // no-overwrite: the loser keeps the winner's map
@@ -103,11 +100,11 @@ object TxnCatalog {
     // stacking a duplicate pin record on v2
     val pins = won.map { case (n, r) => n -> Versioned.currentVersion(spark, r) }
     val v = Versioned.publishRecord(spark, catN,
-      head => {
-        require(head == 0, s"catalog $cat already exists")
-        (Seq.empty, s""","ts":${System.currentTimeMillis()}${pinsJson(pins)}""")
+      parent => {
+        require(parent.version == 0, s"catalog $cat already exists")
+        LogRecord(ts = System.currentTimeMillis(), pins = pins)
       },
-      abortIf = head => head >= 1)
+      abortIf = _.version >= 1)
       .getOrElse(Versioned.currentVersion(spark, catN))
     // POST-PUBLISH validation: on a raw local FS the no-overwrite rename
     // that arbitrated the mapping file has a microsecond exists-then-
@@ -120,29 +117,22 @@ object TxnCatalog {
     v
   }
 
-  private def pinsJson(pins: Map[String, Int]): String =
-    s""","pins":{${pins.toSeq.sortBy(_._1).map { case (n, v) => s""""$n":$v""" }.mkString(",")}}"""
-
   /** The catalog's table name → root mapping. */
   def tablesOf(spark: SparkSession, cat: String): Map[String, String] = {
     val p = tablesFile(cat)
     val f = Versioned.logFs(spark, p) // raw: the map carries no .crc sidecar
     require(f.exists(p), s"no catalog at $cat")
-    val in = f.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    """"([^"]+)":"([^"]+)"""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2)).toMap
+    LogRecord.entries(LogRecord.readJson(f, p)).map { case (t, r) => t -> r.asText }.toMap
   }
 
   /** The pin map at catalog version `v` (head by default). */
   def pinsAt(spark: SparkSession, cat: String, v: Int = -1): Map[String, Int] = {
     val catN = norm(cat)
     val at = if (v >= 1) v else Versioned.currentVersion(spark, catN)
-    val txt = Versioned.recordTextOf(spark, catN, at)
-    """"pins":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toInt).toMap
-    }.getOrElse(throw new IllegalStateException(s"catalog record $at at $cat has no pins"))
+    val pins = Versioned.recordAt(spark, catN, at).pins
+    if (pins.isEmpty)
+      throw new IllegalStateException(s"catalog record $at at $cat has no pins")
+    pins
   }
 
   /** Consistent read of member `name`: time travel at the pinned
@@ -262,14 +252,16 @@ object TxnCatalog {
     // version inside the MV's closure); table-log heads move, the
     // catalog view does not
     val fresh: Map[String, Int] = work.map { case (n, fn) => n -> fn(spark) }.toMap
-    Versioned.publishRecord(spark, catN, head => {
-      val prev = pinsAt(spark, catN, head)
+    Versioned.publishRecord(spark, catN, parent => {
+      val prev = parent.pins
+      if (prev.isEmpty) throw new IllegalStateException(
+        s"catalog record ${parent.version} at $cat has no pins")
       fresh.foreach { case (n, v) =>
         if (prev.getOrElse(n, 0) >= v)
           throw new TxnConflict(
             s"another transaction already pinned '$n' at ${prev(n)} >= $v")
       }
-      (Seq.empty, s""","ts":${System.currentTimeMillis()}${pinsJson(prev ++ fresh)}""")
+      LogRecord(ts = System.currentTimeMillis(), pins = prev ++ fresh)
     }).get
   }
 

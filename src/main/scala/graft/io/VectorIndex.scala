@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import scala.jdk.CollectionConverters._
 
 /** EXACT k-NN search over a versioned embedding table with metadata
   * pruning — the branch-and-bound alternative to approximate ANN when
@@ -119,9 +120,8 @@ object VectorIndex {
       (cents.get(cell), stats.get(cell)) match {
         case (Some((cv, cnrm)), Some((minCos, _))) =>
           val p = new org.apache.hadoop.fs.Path(s"$root/$d/_vec.json")
-          val out = Versioned.fs(spark, p).create(p, false)
-          val json = s"""{"cv":[${cv.mkString(",")}],"cnrm":$cnrm,"minCos":$minCos}"""
-          try out.write(json.getBytes("UTF-8")) finally out.close()
+          LogRecord.writeJson(Versioned.fs(spark, p), p, scala.collection.immutable.ListMap(
+            "cv" -> cv.toSeq, "cnrm" -> cnrm, "minCos" -> minCos))
         case _ => () // a cell the trainer kept but assignment left empty
       }
     }
@@ -161,8 +161,7 @@ object VectorIndex {
       .select(col("vec_id"), col("cell"))
     val rows = batch.join(assigned, "vec_id") // payload columns ride along
     val (rels, rowsMap) = writeAssigned(spark, root, rows, centDf)
-    Versioned.publish(spark, root, h =>
-      (if (h == 0) Seq.empty else Versioned.manifest(spark, root, h)) ++ rels,
+    Versioned.publish(spark, root, _.dirs ++ rels,
       precomputedRows = rowsMap, op = "append")
   }
 
@@ -237,16 +236,11 @@ object VectorIndex {
     val foldSet = fold.toSet
     val dv0 = Versioned.dvOf(spark, root, head0)
     val v = Versioned.publishRecord(spark, root,
-      head => {
-        val dirs = Versioned.manifest(spark, root, head).filterNot(foldSet) ++ rels
-        (dirs, Versioned.extraFields(spark, root, head, dirs, None, "",
-          precomputedRows = rowsMap))
+      parent => {
+        val dirs = parent.dirs.filterNot(foldSet) ++ rels
+        Versioned.nextRecord(spark, root, parent, dirs, precomputedRows = rowsMap)
       },
-      abortIf = head => head != head0 && {
-        val m = Versioned.manifest(spark, root, head).toSet
-        val dvH = Versioned.dvOf(spark, root, head)
-        !foldSet.subsetOf(m) || fold.exists(d => dvH.get(d) != dv0.get(d))
-      })
+      abortIf = parent => parent.version != head0 && Versioned.touchedMoved(parent, fold, dv0))
     if (v.isEmpty && rels.nonEmpty) { // aborted: reclaim the staged fold
       val p = new org.apache.hadoop.fs.Path(
         Versioned.dataPath(root, rels.head.split("/").take(2).mkString("/")))
@@ -260,13 +254,9 @@ object VectorIndex {
     val f = Versioned.fs(spark, p)
     if (!f.exists(p)) None
     else {
-      val in = f.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val cv = """"cv":\[([^\]]*)\]""".r.findFirstMatchIn(txt).get
-        .group(1).split(",").map(_.toDouble)
-      val cnrm = """"cnrm":([-0-9.eE]+)""".r.findFirstMatchIn(txt).get.group(1).toDouble
-      val minCos = """"minCos":([-0-9.eE]+)""".r.findFirstMatchIn(txt).get.group(1).toDouble
-      Some(Meta(cv, cnrm, minCos))
+      val n = LogRecord.readJson(f, p)
+      Some(Meta(n.get("cv").elements().asScala.map(_.asDouble).toArray,
+        n.get("cnrm").asDouble, n.get("minCos").asDouble))
     }
   }
 

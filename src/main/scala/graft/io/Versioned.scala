@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Versioned tables — the lakehouse commit-log primitive a training-data
   * pipeline needs for reproducibility: "train run X read corpus version
@@ -18,8 +19,9 @@ import org.apache.spark.sql.functions._
   * "dirs":["data/<uuid>", ...], "ts":<epochMs>}` plus, when the table
   * declares a zone-map column, per-dir `"stats"` [min,max] entries
   * ([[readRange]] prunes on them before any file listing), and the
-  * `"batchId"` fence for streaming ingest.  Data dirs are write-once and
-  * never mutated or deleted by commits, so
+  * `"batchId"` fence for streaming ingest — every field is listed in
+  * [[LogRecord]], whose codec alone reads and writes record text.  Data
+  * dirs are write-once and never mutated or deleted by commits, so
   *
   *  - **time travel** is just reading an old manifest's dir list;
   *  - **append is O(new data)**: [[commitAppend]] writes ONLY the new
@@ -106,7 +108,7 @@ object Versioned {
         ld.toUri, spark.sparkContext.hadoopConfiguration)
       fc.rename(tmp, headHintPath(ld),
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch { case _: Throwable => () } // a hint, never a publish failure
+    } catch { case NonFatal(_) => () } // a hint, never a publish failure
 
   private def readHeadHint(f: org.apache.hadoop.fs.FileSystem,
       ld: org.apache.hadoop.fs.Path): Int =
@@ -119,7 +121,7 @@ object Versioned {
           finally in.close()
         txt.trim.toInt
       }
-    } catch { case _: Throwable => -1 } // unreadable hint = no hint
+    } catch { case NonFatal(_) => -1 } // unreadable hint = no hint
 
   /** Highest committed version, 0 if the table has none.  Resolves via
     * the `_head` hint (O(1 + lag) probes) when one is present and its
@@ -197,70 +199,53 @@ object Versioned {
     file.contains(s"${dataPath(root, d).stripSuffix("/")}/") ||
       (!d.startsWith("/") && file.contains(s"/$d/"))
 
-  /** Raw record text of version `v` — for sibling loggers (the txn
-    * catalog) that ride this log format with their own fields. */
-  private[io] def recordTextOf(spark: SparkSession, root: String, v: Int): String =
-    recordText(spark, root, v)
-
-  private def recordText(spark: SparkSession, root: String, v: Int): String = {
-    val p = new org.apache.hadoop.fs.Path(logDir(root), f"v$v%05d.json")
-    val in = fs(spark, p).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  /** Dir list of a committed version (paths relative to the root).
-    * Version 0 is the canonical empty table (no dirs), so diffing from
-    * birth — `diff(root, 0, v)` — needs no special case. */
-  /** The record text of version `v`, None for the canonical empty v0.
-    * Every field reader parses from this ONE string — callers that need
-    * several fields of the same version (the commit path reads ~12)
-    * fetch the text once and use the `parse*` cores, paying one
-    * metadata GET instead of one per field (the difference between 1
-    * and 12 object-store round trips per commit at 100 TB). */
-  private def recOpt(spark: SparkSession, root: String, v: Int): Option[String] =
-    if (v == 0) None else Some(recordText(spark, root, v))
-
-  private def parseManifest(txt: String): Seq[String] =
-    """"dirs":\s*\[([^\]]*)\]""".r.findFirstMatchIn(txt) match {
-      case Some(m) =>
-        m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-          .filter(_.nonEmpty).toSeq
-      case None => throw new IllegalStateException("malformed commit record")
+  /** The decoded commit record of version `v` — ONE metadata read; v0 is
+    * the canonical empty table (no dirs), so diffing from birth —
+    * `diff(root, 0, v)` — needs no special case.  Callers that need
+    * several fields of one version decode it once and project (the
+    * commit path reads ~12 fields: one GET instead of twelve on an
+    * object store).  Field reference: [[LogRecord]]. */
+  private[graft] def recordAt(spark: SparkSession, root: String, v: Int): LogRecord =
+    if (v == 0) LogRecord()
+    else {
+      val p = new org.apache.hadoop.fs.Path(logDir(root), f"v$v%05d.json")
+      val in = fs(spark, p).open(p)
+      LogRecord.decode(try new String(in.readAllBytes(), "UTF-8") finally in.close())
     }
 
+  // one-line projections of recordAt, for callers that need one field
   private[graft] def manifest(spark: SparkSession, root: String, v: Int): Seq[String] =
-    recOpt(spark, root, v).map(parseManifest).getOrElse(Seq.empty)
-
-  private def parseTs(txt: String): Long =
-    """"ts":\s*(\d+)""".r.findFirstMatchIn(txt)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalStateException("record has no ts"))
-
-  /** Commit-time wall clock of a version (epoch ms, monotone along the
-    * log: a commit stamps max(now, parent's ts)). */
+    recordAt(spark, root, v).dirs
   private[graft] def tsOf(spark: SparkSession, root: String, v: Int): Long =
-    parseTs(recordText(spark, root, v))
-
-  /** Schema-evolution entries at version `v`: (column, SQL type, the
-    * data dirs that PREDATE the column and must be null-filled on read).
-    * Encoded in the record as `"alters":{"col|type":"dir1,dir2",...}`
-    * and copied verbatim by every later commit; entries referencing
-    * dirs no longer in a manifest are inert (reads intersect with the
-    * manifest), so compaction naturally retires them. */
-  private[graft] def altersOf(spark: SparkSession, root: String, v: Int): Seq[(String, String, Set[String])] =
-    recOpt(spark, root, v).toSeq.flatMap(parseAlters)
-
-  private def parseAlters(txt: String): Seq[(String, String, Set[String])] =
-    parseAltersFrag(txt).toSeq.flatMap { frag =>
-      """"([^"|]+)\|([^"]+)":"([^"]*)"""".r.findAllMatchIn(frag).map(m =>
-        (m.group(1), m.group(2), m.group(3).split(",").filter(_.nonEmpty).toSet))
-    }
-
-  private def parseAltersFrag(txt: String): Option[String] =
-    """"alters":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  private[io] def altersFragOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseAltersFrag)
+    recordAt(spark, root, v).ts
+  private[graft] def statsColOf(spark: SparkSession, root: String, v: Int): Option[String] =
+    recordAt(spark, root, v).statsCol
+  private[graft] def dirStats(spark: SparkSession, root: String, v: Int): Map[String, (Long, Long)] =
+    recordAt(spark, root, v).stats
+  private[graft] def statsColsOf(spark: SparkSession, root: String, v: Int): Seq[String] =
+    recordAt(spark, root, v).statsCols
+  private[graft] def dirMstats(spark: SparkSession, root: String,
+      v: Int): Map[(String, String), (Long, Long)] =
+    recordAt(spark, root, v).mstats
+  private[graft] def bloomColOf(spark: SparkSession, root: String, v: Int): Option[(String, Int)] =
+    recordAt(spark, root, v).bloomDecl
+  private[graft] def dirBlooms(spark: SparkSession, root: String, v: Int): Map[String, String] =
+    recordAt(spark, root, v).bloom
+  private[graft] def dirRows(spark: SparkSession, root: String, v: Int): Map[String, Long] =
+    recordAt(spark, root, v).rows
+  private[graft] def dvOf(spark: SparkSession, root: String, v: Int): Map[String, Seq[String]] =
+    recordAt(spark, root, v).dv
+  private[graft] def dvRowsOf(spark: SparkSession, root: String, v: Int): Map[String, Long] =
+    recordAt(spark, root, v).dvRows
+  private[graft] def sumColOf(spark: SparkSession, root: String, v: Int): Option[String] =
+    recordAt(spark, root, v).sumCol
+  private[graft] def sumVoidOf(spark: SparkSession, root: String, v: Int): Set[String] =
+    recordAt(spark, root, v).sumsVoid
+  private[graft] def checksOf(spark: SparkSession, root: String, v: Int): Seq[(String, String)] =
+    recordAt(spark, root, v).checks
+  private[graft] def policyOf(spark: SparkSession, root: String,
+      v: Int): Option[MaintenancePolicy] =
+    recordAt(spark, root, v).policy
 
   /** Rename events recorded at version `v` as `(old, new)` pairs, in
     * commit order (chains `a>b` then `b>c` compose by folding) — how a
@@ -268,148 +253,8 @@ object Versioned {
     * older step's column names forward to the head's. */
   private[graft] def renameEventsOf(spark: SparkSession, root: String,
       v: Int): Seq[(String, String)] =
-    altersOf(spark, root, v).collect { case (n, "#rename", _) =>
+    recordAt(spark, root, v).alters.collect { case (n, "#rename", _) =>
       val i = n.indexOf('>'); (n.substring(0, i), n.substring(i + 1)) }
-
-  private def parseStatsCol(txt: String): Option[String] =
-    """"statsCol":\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  /** The table's designated zone-map column, if any version declared one. */
-  private[graft] def statsColOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseStatsCol)
-
-  private def parseDirStats(txt: String): Map[String, (Long, Long)] =
-    """"stats":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> (x.group(2).toLong, x.group(3).toLong)).toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-dir [min,max] zone map of the stats column at version `v`. */
-  private[graft] def dirStats(spark: SparkSession, root: String, v: Int): Map[String, (Long, Long)] =
-    recOpt(spark, root, v).map(parseDirStats).getOrElse(Map.empty)
-
-  private def parseStatsCols(txt: String): Seq[String] =
-    """"statsCols":\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1).split(",").filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-
-  /** The table's declared MULTI-COLUMN zone-map columns at version `v`
-    * (see [[commitDeclareStatsCols]]) — independent of (and composable
-    * with) the single clustered [[statsColOf]] column. */
-  private[graft] def statsColsOf(spark: SparkSession, root: String, v: Int): Seq[String] =
-    recOpt(spark, root, v).map(parseStatsCols).getOrElse(Seq.empty)
-
-  private def parseMstats(txt: String): Map[(String, String), (Long, Long)] =
-    """"mstats":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"|]+)\|([^"]+)":\[(-?\d+),(-?\d+)\]""".r.findAllMatchIn(m.group(1))
-        .map(x => (x.group(1), x.group(2)) -> (x.group(3).toLong, x.group(4).toLong))
-        .toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-(column, dir) [min,max] entries of the multi-column zone map at
-    * version `v` (a (col, dir) pair with no entry is conservatively
-    * read by [[readRangeAll]]). */
-  private[graft] def dirMstats(spark: SparkSession, root: String,
-      v: Int): Map[(String, String), (Long, Long)] =
-    recOpt(spark, root, v).map(parseMstats).getOrElse(Map.empty)
-
-  private def parseBloomCol(txt: String): Option[(String, Int)] =
-    """"bloomCol":\s*"([^"]+)","bloomBits":\s*(\d+)""".r
-      .findFirstMatchIn(txt).map(m => (m.group(1), m.group(2).toInt))
-
-  /** The table's bloom-index column and filter size in bits, if any
-    * version declared one (see [[BloomIndex]]). */
-  private[graft] def bloomColOf(spark: SparkSession, root: String, v: Int): Option[(String, Int)] =
-    recOpt(spark, root, v).flatMap(parseBloomCol)
-
-  private def parseDirBlooms(txt: String): Map[String, String] =
-    """"bloom":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2)).toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-dir base64 bloom bitsets at version `v` (a dir with no entry is
-    * conservatively read by [[BloomIndex.readPoint]]). */
-  private[graft] def dirBlooms(spark: SparkSession, root: String, v: Int): Map[String, String] =
-    recOpt(spark, root, v).map(parseDirBlooms).getOrElse(Map.empty)
-
-  private def parseDirRows(txt: String): Map[String, Long] =
-    """"rows":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  private def parseDirBytes(txt: String): Map[String, Long] =
-    """"bytes":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-dir on-disk bytes at version `v` (absent for dirs committed
-    * before this field existed — sizing callers then decline). */
-  private[graft] def dirBytes(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDirBytes).getOrElse(Map.empty)
-
-  /** Per-dir row counts at version `v` (absent for dirs committed before
-    * this field existed — callers fall back to scanning those). */
-  private[graft] def dirRows(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDirRows).getOrElse(Map.empty)
-
-  /** Merge-on-read DELETION VECTORS at version `v`: per data dir, the
-    * delete-sidecar dirs whose (file, row position) pairs are
-    * anti-joined out on every read of that dir — encoded as
-    * `"dv":{"dir":"side1,side2",...}`.  Entries are scoped to the dir
-    * they delete from, so any commit that REPLACES or folds a dir
-    * (CoW update, MERGE, compaction, OPTIMIZE) retires its vectors for
-    * free: the rewrite reads DV-applied content and the new dir starts
-    * clean.  See [[commitDeleteMOR]]. */
-  private[graft] def dvOf(spark: SparkSession, root: String, v: Int): Map[String, Seq[String]] =
-    recOpt(spark, root, v).map(parseDv).getOrElse(Map.empty)
-
-  private def parseDv(txt: String): Map[String, Seq[String]] =
-    """"dv":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).split(",").filter(_.nonEmpty).toSeq).toMap
-    }.getOrElse(Map.empty)
-
-  private def parseDvRows(txt: String): Map[String, Long] =
-    """"dvRows":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  /** Per data dir, how many rows its deletion vectors remove — so
-    * [[countAt]]/[[history]] stay metadata-only under MOR deletes. */
-  private[graft] def dvRowsOf(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDvRows).getOrElse(Map.empty)
-
-  private def parseSumCol(txt: String): Option[String] =
-    """"sumCol":\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  /** The table's declared metadata-SUM column, if any version declared
-    * one (see [[commitDeclareSum]]). */
-  private[graft] def sumColOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseSumCol)
-
-  private def parseDirSums(txt: String): Map[String, Long] =
-    """"sums":\{([^}]*)\}""".r.findFirstMatchIn(txt).map { m =>
-      """"([^"]+)":(-?\d+)""".r.findAllMatchIn(m.group(1))
-        .map(x => x.group(1) -> x.group(2).toLong).toMap
-    }.getOrElse(Map.empty)
-
-  /** Per-dir exact long sums of the declared sum column at version `v`
-    * (a dir with no entry voids the metadata answer — see [[sumAt]]). */
-  private[graft] def dirSums(spark: SparkSession, root: String, v: Int): Map[String, Long] =
-    recOpt(spark, root, v).map(parseDirSums).getOrElse(Map.empty)
-
-  private def parseSumVoid(txt: String): Set[String] =
-    """"sumsVoid":\s*"([^"]*)"""".r.findFirstMatchIn(txt)
-      .map(_.group(1).split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-
-  /** Dirs marked UNSUMMABLE (all-null column, failed cast, pre-alter
-    * generation): recorded so later commits never re-scan them — the
-    * void marker is metadata like the sums themselves. */
-  private[graft] def sumVoidOf(spark: SparkSession, root: String, v: Int): Set[String] =
-    recOpt(spark, root, v).map(parseSumVoid).getOrElse(Set.empty)
 
   /** `SELECT count(*)` at version `v` from manifest METADATA — zero data
     * or footer I/O for dirs whose commit recorded a row count (every
@@ -421,11 +266,9 @@ object Versioned {
     * metadata side (each dir's dvRows entry was measured against its
     * LIVE rows at delete time, so the arithmetic is exact). */
   def countAt(spark: SparkSession, root: String, v: Int): Long = {
-    val known = dirRows(spark, root, v)
-    val dirs = manifest(spark, root, v)
-    val (have, missing) = dirs.partition(known.contains)
-    val deleted = dvRowsOf(spark, root, v)
-    have.map(known).sum - dirs.flatMap(deleted.get).sum +
+    val rec = recordAt(spark, root, v)
+    val (have, missing) = rec.dirs.partition(rec.rows.contains)
+    have.map(rec.rows).sum - rec.dirs.flatMap(rec.dvRows.get).sum +
       (if (missing.isEmpty) 0L
        else readParquetDirs(spark, missing.map(dataPath(root, _))).count())
   }
@@ -437,19 +280,20 @@ object Versioned {
     * users).  All-null dirs carry no entry, matching SQL min/max
     * null-ignoring semantics conservatively. */
   def statsRangeAt(spark: SparkSession, root: String, v: Int): Option[(Long, Long)] = {
-    val sc = statsColOf(spark, root, v)
+    val rec = recordAt(spark, root, v)
+    val sc = rec.statsCol
     if (sc.isEmpty || Z2.findFirstIn(sc.get).nonEmpty) return None
     // deletion vectors make per-dir [min,max] a conservative ENVELOPE
     // (sound for pruning, wrong as an exact answer: the extremum row may
     // be deleted) — fall back to the scan while any vector is live
-    if (dvOf(spark, root, v).nonEmpty) return None
-    val st = dirStats(spark, root, v)
-    val dirs = manifest(spark, root, v)
+    if (rec.dv.nonEmpty) return None
+    val st = rec.stats
+    val dirs = rec.dirs
     // an alters generation mentioning the column voids the exact answer:
     // pre-generation dirs may physically carry values that are not the
     // column's logical content (drop-then-re-add), so a recorded extremum
     // could be stale even though range PRUNING on it stays row-safe
-    if (alterMentions(spark, root, v, sc.get, dirs)) return None
+    if (alterMentions(rec, sc.get)) return None
     if (dirs.isEmpty || !dirs.forall(st.contains)) None
     else Some((dirs.map(st(_)._1).min, dirs.map(st(_)._2).max))
   }
@@ -458,12 +302,11 @@ object Versioned {
     * a dir still in the manifest?  If so the column's physical bytes in
     * those dirs are not its logical values, and every exact metadata
     * aggregate on the column must decline. */
-  private def alterMentions(spark: SparkSession, root: String, v: Int,
-      colName: String, dirs: Seq[String]): Boolean = {
-    val ds = dirs.toSet
+  private def alterMentions(rec: LogRecord, colName: String): Boolean = {
+    val ds = rec.dirs.toSet
     // rename generations don't count: their carried entries are valid
-    // verbatim (same bytes, new name) — see the extraFields taint rule
-    altersOf(spark, root, v).exists { case (evCol, ty, touched) =>
+    // verbatim (same bytes, new name) — see the nextRecord taint rule
+    rec.alters.exists { case (evCol, ty, touched) =>
       ty != "#rename" && evCol == colName && touched.exists(ds) }
   }
 
@@ -477,14 +320,15 @@ object Versioned {
     * every declared column. */
   def statsRangeOn(spark: SparkSession, root: String, v: Int,
       colName: String): Option[(Long, Long)] = {
-    if (!statsColsOf(spark, root, v).contains(colName)) return None
-    if (dvOf(spark, root, v).nonEmpty) return None
-    val m = dirMstats(spark, root, v)
-    val dirs = manifest(spark, root, v)
+    val rec = recordAt(spark, root, v)
+    if (!rec.statsCols.contains(colName)) return None
+    if (rec.dv.nonEmpty) return None
+    val m = rec.mstats
+    val dirs = rec.dirs
     // see statsRangeAt: alters generations void the exact answer (the
     // commit path also refuses to measure such dirs, so this guard is
     // belt-and-braces for records written before that discipline)
-    if (alterMentions(spark, root, v, colName, dirs)) return None
+    if (alterMentions(rec, colName)) return None
     if (dirs.isEmpty || !dirs.forall(d => m.contains((colName, d)))) None
     else Some((dirs.map(d => m((colName, d))._1).min,
       dirs.map(d => m((colName, d))._2).max))
@@ -549,10 +393,6 @@ object Versioned {
     }.toMap
   }
 
-  /** The record fields beyond `dirs`: the monotone commit timestamp plus
-    * — when this table keeps a zone map — the stats column and per-dir
-    * [min,max] entries (parent entries reused verbatim for carried dirs,
-    * computed only for new ones). */
   /** Schema of one IMMUTABLE data dir, cached for the JVM's lifetime.
     * Data dirs are write-once by the layout contract (never mutated;
     * vacuum deletes whole dirs, after which nothing reads them), so a
@@ -739,23 +579,30 @@ object Versioned {
       sums.toMap ++ obsSums))
   }
 
-  private[io] def extraFields(spark: SparkSession, root: String, head: Int,
-      dirs: Seq[String], statsCol: Option[String], more: String = "",
+  /** The record publishing manifest `dirs` on top of `parent` (the
+    * decoded head record [[publishRecord]] hands its closure): the monotone
+    * commit timestamp plus every carried field (see [[LogRecord]]) —
+    * parent entries reused verbatim for carried dirs, new dirs measured
+    * in ONE fused job ([[measureNewDirs]]).  `statsCol`, `alters`,
+    * `blooms`, `sumCol`, `checks`, `statsCols` and `policy` override the
+    * parent's declaration; `dvAdd` attaches new deletion-vector sidecars
+    * (with their row counts); `op` labels the commit. */
+  private[io] def nextRecord(spark: SparkSession, root: String, parent: LogRecord,
+      dirs: Seq[String], statsCol: Option[String] = None,
       precomputed: Map[String, (Long, Long)] = Map.empty,
-      alters: Option[String] = None,
+      alters: Option[Seq[(String, String, Set[String])]] = None,
       precomputedRows: Map[String, Long] = Map.empty,
       blooms: Option[(String, Int, Map[String, String])] = None,
       dvAdd: Map[String, (Seq[String], Long)] = Map.empty,
       sumCol: Option[String] = None,
-      checksArg: Option[String] = None,
-      statsColsArg: Option[Seq[String]] = None,
+      checks: Option[Seq[(String, String)]] = None,
+      statsCols: Option[Seq[String]] = None,
       suppressSum: Boolean = false,
-      opArg: String = "",
-      policyArg: Option[String] = None): String = {
-    // ONE metadata read of the head record serves every carried field
-    // below (12 reads collapsed to 1 — on an object store that is the
-    // difference between 1 and 12 GETs per commit)
-    val ht = recOpt(spark, root, head)
+      op: String = "",
+      policy: Option[MaintenancePolicy] = None): LogRecord = {
+    // the ONE decoded head record serves every carried field below (12
+    // reads collapsed to 1 — on an object store that is the difference
+    // between 1 and 12 GETs per commit)
     // dirs whose PHYSICAL parquet bytes for a column are not its LOGICAL
     // values: any dir listed in an alters generation mentioning the
     // column (add → null-filled on read; drop-then-re-add → the pre-drop
@@ -768,10 +615,8 @@ object Versioned {
     // bytes ARE the new name's logical values (mapped forward on read),
     // and the rename commit carries the old entries verbatim — only
     // add (null-fill) and drop (dead bytes) generations lie
-    val altNullFrag = alters.orElse(ht.flatMap(parseAltersFrag))
-    val altNull: Map[String, Set[String]] = altNullFrag
-      .map(f => parseAlters(s"""{"alters":{$f}}"""))
-      .getOrElse(Seq.empty)
+    val alterEvents = alters.getOrElse(parent.alters)
+    val altNull: Map[String, Set[String]] = alterEvents
       .flatMap { case (evCol, ty, ds) =>
         if (ty == "#rename") Seq.empty else Seq(evCol -> ds) }
       .groupBy(_._1).map { case (c, es) => c -> es.flatMap(_._2).toSet }
@@ -779,72 +624,61 @@ object Versioned {
       val phys = c match { case Z2(x, y, _) => Seq(x, y); case _ => Seq(c) }
       phys.exists(pc => altNull.getOrElse(pc, Set.empty).contains(d))
     }
-    val parentSc = ht.flatMap(parseStatsCol)
+    val parentSc = parent.statsCol
     val sc = statsCol.orElse(parentSc)
-    val ts = math.max(System.currentTimeMillis(),
-      ht.map(parseTs).getOrElse(0L))
+    val ts = math.max(System.currentTimeMillis(), parent.ts)
     // ---- need-lists for every measured field, computed up front so ONE
     // fused job (measureNewDirs) serves them all; each field keeps its
     // legacy per-field job as the fallback when file→dir attribution
     // fails (the same discipline the fields ran individually)
-    val scParent: Map[String, (Long, Long)] = sc.map { c =>
-      // parent entries are only reusable when they were measured under
-      // the SAME column: re-declaring a different statsCol must NOT
-      // inherit the old column's ranges (readRange would prune carried
-      // dirs by the wrong values — silently losing rows); instead each
-      // carried dir is re-measured or, lacking the new column, left
-      // entry-less and read conservatively
-      if (parentSc.forall(_ == c)) ht.map(parseDirStats).getOrElse(Map.empty)
-      else Map.empty[String, (Long, Long)]
-    }.getOrElse(Map.empty)
+    // parent entries are only reusable when they were measured under
+    // the SAME column: re-declaring a different statsCol must NOT
+    // inherit the old column's ranges (readRange would prune carried
+    // dirs by the wrong values — silently losing rows); instead each
+    // carried dir is re-measured or, lacking the new column, left
+    // entry-less and read conservatively
+    val scParent: Map[String, (Long, Long)] =
+      if (sc.isDefined && parentSc.forall(_ == sc.get)) parent.stats else Map.empty
     val scNeed: Seq[String] = sc.toSeq.flatMap { c =>
       dirs.filter(d => !logicallyNull(c, d) && !scParent.contains(d) &&
         !precomputed.contains(d))
     }
-    val mcols = statsColsArg.getOrElse(ht.map(parseStatsCols).getOrElse(Seq.empty))
-    val parentM = ht.map(parseMstats).getOrElse(Map.empty[(String, String), (Long, Long)])
+    val mcols = statsCols.getOrElse(parent.statsCols)
+    val parentM = parent.mstats
     val mcolNeed: Map[String, Seq[String]] = mcols.map(c =>
       c -> dirs.filterNot(d => parentM.contains((c, d)) || logicallyNull(c, d)))
       .filter(_._2.nonEmpty).toMap
-    val parentRows = ht.map(parseDirRows).getOrElse(Map.empty[String, Long])
     val missing = dirs.filterNot(d =>
-      parentRows.contains(d) || precomputedRows.contains(d))
-    val sumColR = if (suppressSum) None else sumCol.orElse(ht.flatMap(parseSumCol))
-    val parentSums = ht.map(parseDirSums).getOrElse(Map.empty[String, Long])
-    val parentVoid = ht.map(parseSumVoid).getOrElse(Set.empty[String])
+      parent.rows.contains(d) || precomputedRows.contains(d))
+    val sumColR = if (suppressSum) None else sumCol.orElse(parent.sumCol)
     val missingSum: Seq[String] = sumColR.toSeq.flatMap(mc =>
       dirs.filterNot(d =>
-        parentSums.contains(d) || parentVoid(d) || logicallyNull(mc, d)))
+        parent.sums.contains(d) || parent.sumsVoid(d) || logicallyNull(mc, d)))
     // the fused pass: per-column need lists merged (the clustered
     // statsCol may also be a declared statsCols member)
     val statNeed: Map[String, Seq[String]] =
       (sc.toSeq.map(c => c -> scNeed) ++ mcolNeed.toSeq)
         .groupBy(_._1).map { case (c, es) => c -> es.flatMap(_._2).distinct }
     val fused = measureNewDirs(spark, root, missing, statNeed, sumColR, missingSum)
-    val statsJson = sc.map { c =>
+    val stats: Map[String, (Long, Long)] = sc.map { c =>
       val freshSc: String => Option[(Long, Long)] = fused match {
         case Some(m) => d => m.stats.get((c, d))
         case None    => d => statsFor(spark, root, d, c)
       }
-      val entries = dirs.flatMap { d =>
-        // an alter-mentioned dir's physical bytes are not its logical
-        // values: no entry (conservative read), never a stale measure
-        if (logicallyNull(c, d)) None
-        else scParent.get(d).orElse(precomputed.get(d))
-          .orElse(freshSc(d))
-          .map { case (lo, hi) => s""""$d":[$lo,$hi]""" }
-      }
-      s""","statsCol":"$c","stats":{${entries.mkString(",")}}"""
-    }.getOrElse("")
+      // an alter-mentioned dir's physical bytes are not its logical
+      // values: no entry (conservative read), never a stale measure
+      dirs.filterNot(logicallyNull(c, _)).flatMap(d =>
+        scParent.get(d).orElse(precomputed.get(d)).orElse(freshSc(d)).map(d -> _)).toMap
+    }.getOrElse(Map.empty)
     // MULTI-COLUMN zone map: entries are keyed (column, dir), so a
     // re-declaration that adds a column reuses the carried columns'
     // entries verbatim and measures only the new column; a dropped
-    // column's entries simply stop being serialized.  New or rewritten
+    // column's entries simply stop being recorded.  New or rewritten
     // dirs are measured for every declared column — via the fused job,
     // never a job per dir — which is what keeps the map live across
     // EVERY rewrite path (CoW, MERGE, compaction, OPTIMIZE) for free:
     // they all publish through here.
-    val mstatsJson = if (mcols.isEmpty) "" else {
+    val mstats: Map[(String, String), (Long, Long)] = if (mcols.isEmpty) Map.empty else {
       val fresh: Map[(String, String), (Long, Long)] = fused match {
         case Some(m) => mcolNeed.keys.flatMap(c =>
           mcolNeed(c).flatMap(d => m.stats.get((c, d)).map((c, d) -> _))).toMap
@@ -852,12 +686,11 @@ object Versioned {
           mstatsForCol(spark, root, mcolNeed(c), c)
             .map { case (d, e) => (c, d) -> e }).toMap
       }
-      val entries = for {
+      (for {
         c <- mcols; d <- dirs
         if !logicallyNull(c, d) // drop-then-re-add: stale physical bytes
         e <- parentM.get((c, d)).orElse(fresh.get((c, d)))
-      } yield s""""$c|$d":[${e._1},${e._2}]"""
-      s""","statsCols":"${mcols.mkString(",")}","mstats":{${entries.mkString(",")}}"""
+      } yield (c, d) -> e).toMap
     }
     // per-dir row counts: parent entries carried verbatim, only new or
     // rewritten dirs counted — ALL missing dirs in the fused job (per-
@@ -880,132 +713,91 @@ object Versioned {
             d -> perFile.filter(fc => fileInDir(root, fc._1, d)).map(_._2).sum).toMap
         }
     }
-    val rowEntries = dirs.map { d =>
-      val n = parentRows.get(d).orElse(precomputedRows.get(d))
-        .getOrElse(counted.getOrElse(d, 0L)) // no files = an empty dir
-      s""""$d":$n"""
-    }
-    val rowsJson = s""","rows":{${rowEntries.mkString(",")}}"""
+    val rows = dirs.map(d => d -> parent.rows.get(d).orElse(precomputedRows.get(d))
+      .getOrElse(counted.getOrElse(d, 0L))).toMap // no files = an empty dir
     // per-dir on-disk BYTES: parent entries carried verbatim, new dirs
     // measured with one driver-side content summary each (no Spark job)
     // — the accurate size feed for readAt's broadcast sizing, where a
     // schema-width guess would under-estimate wide text rows into a
     // forced-broadcast OOM
-    val parentBytes = ht.map(parseDirBytes).getOrElse(Map.empty[String, Long])
-    val byteEntries = dirs.map { d =>
-      val n = parentBytes.get(d).getOrElse(
-        try fs(spark, new org.apache.hadoop.fs.Path(dataPath(root, d)))
-          .getContentSummary(new org.apache.hadoop.fs.Path(dataPath(root, d))).getLength
-        catch { case _: java.io.FileNotFoundException => 0L })
-      s""""$d":$n"""
-    }
-    val bytesJson = s""","bytes":{${byteEntries.mkString(",")}}"""
+    val bytes = dirs.map(d => d -> parent.bytes.getOrElse(d, {
+      val p = new org.apache.hadoop.fs.Path(dataPath(root, d))
+      try fs(spark, p).getContentSummary(p).getLength
+      catch { case _: java.io.FileNotFoundException => 0L }
+    })).toMap
     // metadata sums: parent entries carried verbatim for carried dirs;
     // new or rewritten dirs measured in the fused job.  A dir is
     // entry-less when the column is absent (pre-alter generation), any
     // non-null value fails the long cast, or every row is null — sumAt
     // then falls back to the scan, never answers wrong.
-    val sumJson = sumColR.map { mc =>
+    val (sums, sumsVoid) = sumColR.map { mc =>
       val fresh: Map[String, Long] = fused match {
         case Some(m) => missingSum.flatMap(d => m.sums.get(d).map(d -> _)).toMap
         case None =>
           if (missingSum.isEmpty) Map.empty[String, Long]
           else sumsFor(spark, root, missingSum, mc)
       }
-      val entries = dirs.flatMap(d =>
-        if (logicallyNull(mc, d)) None // stale physical bytes: no entry
-        else parentSums.get(d).orElse(fresh.get(d)).map(n => s""""$d":$n"""))
+      val entries = dirs.filterNot(logicallyNull(mc, _)) // stale physical bytes
+        .flatMap(d => parent.sums.get(d).orElse(fresh.get(d)).map(d -> _)).toMap
       // a dir that measured unsummable is marked VOID so no later commit
       // ever re-scans it (the probe is a data read, not a footer read)
-      val void = dirs.filter(d =>
-        parentVoid(d) || (missingSum.contains(d) && !fresh.contains(d)))
-      val voidJson =
-        if (void.isEmpty) "" else s""","sumsVoid":"${void.sorted.mkString(",")}""""
-      s""","sumCol":"$mc","sums":{${entries.mkString(",")}}$voidJson"""
-    }.getOrElse("")
+      (entries, dirs.filter(d =>
+        parent.sumsVoid(d) || (missingSum.contains(d) && !fresh.contains(d))).toSet)
+    }.getOrElse((Map.empty[String, Long], Set.empty[String]))
     // bloom index: parent entries carried for carried dirs; new dirs get
     // entries from the bloom-aware ingest paths AND from every rewrite/
     // fold/clustered path (bloomsForStaged / bloomForDir), so the index
     // survives CoW/MERGE/OPTIMIZE churn; only plain appends leave their
     // dirs entry-less (absent = read conservatively, so they compose —
     // they just don't prune)
-    val parentBloomDecl = ht.flatMap(parseBloomCol)
-    val bloomJson = blooms.orElse(
-        parentBloomDecl.map { case (c, m) => (c, m, Map.empty[String, String]) })
+    val bloomOut = blooms.orElse(
+        parent.bloomDecl.map { case (c, m) => (c, m, Map.empty[String, String]) })
       .map { case (c, m, fresh) =>
         // parent entries are only reusable under the SAME (column, bits)
         // declaration — a mismatched carry would probe old bitsets with
         // the wrong hashes (false pruning = lost rows), the exact trap
         // the stats path already guards
-        val parent =
-          if (parentBloomDecl.forall(_ == ((c, m)))) ht.map(parseDirBlooms).getOrElse(Map.empty)
+        val par =
+          if (parent.bloomDecl.forall(_ == ((c, m)))) parent.bloom
           else Map.empty[String, String]
-        val entries = dirs.flatMap(d =>
-          parent.get(d).orElse(fresh.get(d)).map(b => s""""$d":"$b""""))
-        s""","bloomCol":"$c","bloomBits":$m,"bloom":{${entries.mkString(",")}}"""
-      }.getOrElse("")
-    // schema-evolution entries ride along verbatim on every commit
-    val altersJson = alters.orElse(ht.flatMap(parseAltersFrag))
-      .map(a => s""","alters":{$a}""").getOrElse("")
-    // the persisted ingest contract rides along the same way
-    val checksJson = checksArg.orElse(ht.flatMap(parseChecksFrag))
-      .map(c => s""","checks":{$c}""").getOrElse("")
-    // the declared maintenance policy rides along the same way — every
-    // commit carries it, so a parameterless maintain() always sees it
-    val policyJson = policyArg.orElse(ht.flatMap(parsePolicyFrag))
-      .map(p => s""","policy":{$p}""").getOrElse("")
+        (c, m, dirs.flatMap(d => par.get(d).orElse(fresh.get(d)).map(d -> _)).toMap)
+      }
     // deletion vectors: parent entries carried for carried dirs (a
     // replaced/folded dir's entries drop WITH the dir — the rewrite read
     // DV-applied content, so its vectors are retired, not lost), plus the
     // new sidecars a commitDeleteMOR contributes via dvAdd
-    val parentDv = ht.map(parseDv).getOrElse(Map.empty[String, Seq[String]])
-    val parentDvRows = ht.map(parseDvRows).getOrElse(Map.empty[String, Long])
     val dvEntries = dirs.flatMap { d =>
-      val sides = parentDv.getOrElse(d, Seq.empty) ++
+      val sides = parent.dv.getOrElse(d, Seq.empty) ++
         dvAdd.get(d).map(_._1).getOrElse(Seq.empty)
       if (sides.isEmpty) None
       else Some((d, sides,
-        parentDvRows.getOrElse(d, 0L) + dvAdd.get(d).map(_._2).getOrElse(0L)))
+        parent.dvRows.getOrElse(d, 0L) + dvAdd.get(d).map(_._2).getOrElse(0L)))
     }
-    val dvJson =
-      if (dvEntries.isEmpty) ""
-      else {
-        val e = dvEntries.map { case (d, s, _) => s""""$d":"${s.mkString(",")}"""" }
-        val n = dvEntries.map { case (d, _, k) => s""""$d":$k""" }
-        s""","dv":{${e.mkString(",")}},"dvRows":{${n.mkString(",")}}"""
-      }
-    // the OPERATION label (DESCRIBE HISTORY parity): stamped per commit,
-    // deliberately NOT carried from the parent — each record names what
-    // produced IT; replay records (restore/clone) stamp their own
-    val opJson = if (opArg.isEmpty) "" else s""","op":"$opArg""""
-    s""","ts":$ts$opJson$statsJson$mstatsJson$rowsJson$bytesJson$sumJson$bloomJson$altersJson$checksJson$policyJson$dvJson$more"""
+    LogRecord(dirs = dirs, ts = ts,
+      // the OPERATION label (DESCRIBE HISTORY parity): stamped per commit,
+      // deliberately NOT carried from the parent — each record names what
+      // produced IT; replay records (restore/clone) stamp their own
+      op = Some(op).filter(_.nonEmpty),
+      statsCol = sc, stats = stats, statsCols = mcols, mstats = mstats,
+      rows = rows, bytes = bytes,
+      sumCol = sumColR, sums = sums, sumsVoid = sumsVoid,
+      bloomCol = bloomOut.map(_._1), bloomBits = bloomOut.fold(0)(_._2),
+      bloom = bloomOut.fold(Map.empty[String, String])(_._3),
+      // schema-evolution events, the persisted ingest contract and the
+      // declared maintenance policy ride along verbatim on every commit,
+      // so a parameterless maintain() always sees the policy
+      alters = alterEvents,
+      checks = checks.getOrElse(parent.checks),
+      policy = policy.orElse(parent.policy),
+      dv = dvEntries.map(e => e._1 -> e._2).toMap,
+      dvRows = dvEntries.map(e => e._1 -> e._3).toMap)
   }
-
-  private def parseOp(txt: String): Option[String] =
-    """"op":\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
 
   /** A table's declared maintenance knobs ([[commitDeclarePolicy]]) —
     * what a parameterless [[maintain]] resolves before falling back to
     * the global defaults. */
   final case class MaintenancePolicy(smallRows: Long, targetRows: Long,
       buckets: Int, maxCover: Int, maxDvFraction: Double)
-
-  private def parsePolicyFrag(txt: String): Option[String] =
-    """"policy":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  /** The declared maintenance policy at version `v`, if any. */
-  private[graft] def policyOf(spark: SparkSession, root: String,
-      v: Int): Option[MaintenancePolicy] =
-    recOpt(spark, root, v).flatMap(parsePolicyFrag).map { f =>
-      def num(k: String): Option[String] =
-        (s""""$k":\\s*(-?[0-9.]+)""").r.findFirstMatchIn(f).map(_.group(1))
-      MaintenancePolicy(
-        num("smallRows").map(_.toLong).getOrElse(0L),
-        num("targetRows").map(_.toLong).getOrElse(0L),
-        num("buckets").map(_.toInt).getOrElse(16),
-        num("maxCover").map(_.toInt).getOrElse(2),
-        num("maxDvFraction").map(_.toDouble).getOrElse(0.3))
-    }
 
   /** Declare the table's MAINTENANCE POLICY: the [[maintain]] knobs
     * (`smallRows`/`targetRows` small-dir folding, `buckets`/`maxCover`
@@ -1022,8 +814,8 @@ object Versioned {
   def commitDeclarePolicy(spark: SparkSession, root: String,
       smallRows: Long = 0L, targetRows: Long = 0L, buckets: Int = 16,
       maxCover: Int = 2, maxDvFraction: Double = 0.3): Int =
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
       require(smallRows >= 0 && targetRows >= 0 &&
         (targetRows == 0 || targetRows >= smallRows),
         s"bad policy: smallRows=$smallRows targetRows=$targetRows " +
@@ -1032,33 +824,11 @@ object Versioned {
         s"bad policy: buckets=$buckets maxCover=$maxCover")
       require(maxDvFraction >= 0.0 && maxDvFraction <= 1.0,
         s"bad policy: maxDvFraction=$maxDvFraction")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        policyArg = Some(
-          s""""smallRows":$smallRows,"targetRows":$targetRows,""" +
-            s""""buckets":$buckets,"maxCover":$maxCover,""" +
-            s""""maxDvFraction":$maxDvFraction"""),
-        opArg = "declare"))
+      nextRecord(spark, root, parent, parent.dirs,
+        policy = Some(MaintenancePolicy(smallRows, targetRows, buckets,
+          maxCover, maxDvFraction)),
+        op = "declare")
     }).get
-
-  /** The commit's operation label at version `v` (absent for records
-    * written before labels existed, and for paths that stamp none). */
-  private[graft] def opOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseOp)
-
-  private def parseChecksFrag(txt: String): Option[String] =
-    """"checks":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  private def checksFragOf(spark: SparkSession, root: String, v: Int): Option[String] =
-    recOpt(spark, root, v).flatMap(parseChecksFrag)
-
-  /** The persisted CHECK constraints at version `v`: (name, SQL boolean
-    * expression), in declaration order. */
-  private[graft] def checksOf(spark: SparkSession, root: String, v: Int): Seq[(String, String)] =
-    checksFragOf(spark, root, v).toSeq.flatMap { frag =>
-      """"([^"]+)":"([^"]*)"""".r.findAllMatchIn(frag)
-        .map(m => (m.group(1), m.group(2))).toSeq
-    }
 
   /** Exact long sums of `colName` per dir, all missing dirs in ONE
     * narrow-column job (per-file partials grouped driver-side, the row
@@ -1102,15 +872,14 @@ object Versioned {
   def commitDeclareSum(spark: SparkSession, root: String, colName: String): Int = {
     require(!colName.contains("\"") && !colName.contains("\\"),
       s"unsupported characters in column name $colName")
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
-      sumColOf(spark, root, head).foreach(c0 =>
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
+      parent.sumCol.foreach(c0 =>
         require(c0 == colName,
           s"$root already keeps metadata sums on $c0; " +
             s"re-declaring $colName would corrupt carried entries"))
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        sumCol = Some(colName), opArg = "declare"))
+      nextRecord(spark, root, parent, parent.dirs,
+        sumCol = Some(colName), op = "declare")
     }).get
   }
 
@@ -1141,14 +910,13 @@ object Versioned {
       s"unsupported characters in column name $c"))
     cols.foreach(c => require(Z2.findFirstIn(c).isEmpty,
       s"Morton pseudo-columns belong to the clustered map (statsCol), not statsCols"))
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
-      val prior = statsColsOf(spark, root, head)
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
+      val prior = parent.statsCols
       require(prior.forall(cols.contains),
         s"$root already keeps zone maps on $prior; re-declaring may only extend the set")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        statsColsArg = Some(cols), opArg = "declare"))
+      nextRecord(spark, root, parent, parent.dirs,
+        statsCols = Some(cols), op = "declare")
     }).get
   }
 
@@ -1158,15 +926,13 @@ object Versioned {
     * explicit-shrink twin of [[commitDeclareSum]], mirroring
     * [[commitRetireStatsCols]]. */
   def commitRetireSum(spark: SparkSession, root: String): Int =
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
-      require(sumColOf(spark, root, head).isDefined,
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
+      require(parent.sumCol.isDefined,
         s"$root declares no metadata-sum column")
-      val dirs = manifest(spark, root, head)
       // suppressing the parent sum-column carry IS the retirement; every
       // other field is reconstructed as usual
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        suppressSum = true, opArg = "retire"))
+      nextRecord(spark, root, parent, parent.dirs, suppressSum = true, op = "retire")
     }).get
 
   /** Retire columns from the multi-column zone map: re-declare to a
@@ -1179,14 +945,13 @@ object Versioned {
   def commitRetireStatsCols(spark: SparkSession, root: String,
       cols: Seq[String]): Int = {
     require(cols.distinct == cols, s"duplicate zone-map columns in $cols")
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
-      val prior = statsColsOf(spark, root, head)
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
+      val prior = parent.statsCols
       require(cols.forall(prior.contains) && cols != prior,
         s"retire must name a strict subset of the declared set $prior")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        statsColsArg = Some(cols), opArg = "retire"))
+      nextRecord(spark, root, parent, parent.dirs,
+        statsCols = Some(cols), op = "retire")
     }).get
   }
 
@@ -1204,14 +969,14 @@ object Versioned {
   def readRangeAll(spark: SparkSession, root: String, v: Int,
       preds: Seq[(String, Long, Long)]): DataFrame = {
     require(preds.nonEmpty, "readRangeAll needs at least one predicate")
-    val declared = statsColsOf(spark, root, v)
-    val legacy = statsColOf(spark, root, v).filter(c => Z2.findFirstIn(c).isEmpty)
+    val rec = recordAt(spark, root, v)
+    val declared = rec.statsCols
+    val legacy = rec.statsCol.filter(c => Z2.findFirstIn(c).isEmpty)
     preds.foreach { case (c, _, _) =>
       require(declared.contains(c) || legacy.contains(c),
         s"$root declares no zone map on $c; commitDeclareStatsCols first") }
-    val m = dirMstats(spark, root, v)
-    val st = dirStats(spark, root, v)
-    val keep = manifest(spark, root, v).filter(d => preds.forall { case (c, lo, hi) =>
+    val (m, st) = (rec.mstats, rec.stats)
+    val keep = rec.dirs.filter(d => preds.forall { case (c, lo, hi) =>
       val e = if (declared.contains(c)) m.get((c, d)) else st.get(d)
       e.forall { case (a, b) => b >= lo && a <= hi }
     })
@@ -1236,14 +1001,12 @@ object Versioned {
     * contributes nothing), or deletion vectors are live (the deleted
     * rows' contribution is unknown until the next fold). */
   def sumAt(spark: SparkSession, root: String, v: Int): Option[Long] = {
-    if (sumColOf(spark, root, v).isEmpty) return None
-    if (dvOf(spark, root, v).nonEmpty) return None
-    val sums = dirSums(spark, root, v)
-    val rows = dirRows(spark, root, v)
-    val dirs = manifest(spark, root, v)
+    val rec = recordAt(spark, root, v)
+    if (rec.sumCol.isEmpty) return None
+    if (rec.dv.nonEmpty) return None
+    val (sums, rows, dirs) = (rec.sums, rec.rows, rec.dirs)
     // alters generations void the exact answer (see statsRangeAt)
-    if (alterMentions(spark, root, v, sumColOf(spark, root, v).get, dirs))
-      return None
+    if (alterMentions(rec, rec.sumCol.get)) return None
     if (dirs.nonEmpty &&
         dirs.forall(d => sums.contains(d) || rows.get(d).contains(0L)))
       Some(dirs.flatMap(sums.get).sum)
@@ -1273,16 +1036,15 @@ object Versioned {
     * The write job is OBSERVED: the row count plus min/max for the
     * table's declared stats columns (and `extraStatsCols` a caller is
     * about to declare) and the declared sum column are measured on the
-    * stream of written rows and cached for [[extraFields]] — the commit
+    * stream of written rows and cached for [[nextRecord]] — the commit
     * that publishes this dir then needs NO second pass over it. */
   private[graft] def writeDataDir(spark: SparkSession, root: String, df: DataFrame,
       extraStatsCols: Seq[String] = Seq.empty): String = {
     val rel = s"data/${java.util.UUID.randomUUID()}"
     val head = currentVersion(spark, root)
-    val ht = recOpt(spark, root, head)
-    val declStats = (ht.flatMap(parseStatsCol).toSeq ++
-      ht.map(parseStatsCols).getOrElse(Seq.empty) ++ extraStatsCols).distinct
-    val declSum = ht.flatMap(parseSumCol).toSeq.distinct
+    val parent = recordAt(spark, root, head)
+    val declStats = (parent.statsCol.toSeq ++ parent.statsCols ++ extraStatsCols).distinct
+    val declSum = parent.sumCol.toSeq
     val cols = df.columns.toSet
     def present(c: String): Boolean = c match {
       case Z2(x, y, _) => cols.contains(x) && cols.contains(y)
@@ -1325,11 +1087,6 @@ object Versioned {
     rel
   }
 
-  /** Publish the next version after the (re-resolved) head.  Retries
-    * against the moving head until the rename lands (bounded); `recOf`
-    * yields the dir list plus extra record fields for a given head;
-    * `abortIf` lets a caller bail out when a racing commit made this one
-    * redundant (the batchId fence) — None is returned ONLY on abort. */
   /** Per-root publish locks: on the LOCAL filesystem Hadoop's
     * no-overwrite rename is an exists-check followed by a POSIX rename
     * (which silently overwrites), so two publishers racing the same
@@ -1416,9 +1173,16 @@ object Versioned {
         s"unknown $CommitAdapterConf '$other' (rename | create-exclusive)")
     }
 
+  /** Publish the next version after the (re-resolved) head.  Retries
+    * against the moving head until the rename lands (bounded); each
+    * attempt decodes the head record ONCE and hands it to `abortIf` and
+    * `recOf` (its `version` is the head; v0 is the empty record).
+    * `recOf` yields the record to land (its `version` is stamped here);
+    * `abortIf` lets a caller bail out when a racing commit made this one
+    * redundant (the batchId fence) — None is returned ONLY on abort. */
   private[io] def publishRecord(spark: SparkSession, root: String,
-      recOf: Int => (Seq[String], String),
-      abortIf: Int => Boolean = _ => false): Option[Int] = {
+      recOf: LogRecord => LogRecord,
+      abortIf: LogRecord => Boolean = _ => false): Option[Int] = {
     val ld = logDir(root)
     val f = logFs(spark, ld) // raw: records carry no .crc sidecar (see logFs)
     f.mkdirs(ld)
@@ -1431,11 +1195,10 @@ object Versioned {
     var attempt = 0
     while (attempt < 50) {
       attempt += 1
-      val head = currentVersion(spark, root)
-      if (abortIf(head)) return None
-      val v = head + 1
-      val (dirs, extra) = recOf(head)
-      val rec = s"""{"version":$v,"dirs":[${dirs.map(d => s""""$d"""").mkString(",")}]$extra}"""
+      val parent = recordAt(spark, root, currentVersion(spark, root))
+      if (abortIf(parent)) return None
+      val v = parent.version + 1
+      val rec = LogRecord.encode(recOf(parent).copy(version = v))
       val dst = new org.apache.hadoop.fs.Path(ld, f"v$v%05d.json")
       if (landRecord(f, fc, ld, dst, rec, adapter)) {
         writeHeadHint(spark, ld, v) // O(1) head resolution for readers
@@ -1449,15 +1212,15 @@ object Versioned {
   }
 
   private[graft] def publish(spark: SparkSession, root: String,
-      dirsOf: Int => Seq[String], statsCol: Option[String] = None,
+      dirsOf: LogRecord => Seq[String], statsCol: Option[String] = None,
       precomputed: Map[String, (Long, Long)] = Map.empty,
       precomputedRows: Map[String, Long] = Map.empty,
       blooms: Option[(String, Int, Map[String, String])] = None,
       op: String = "commit"): Int =
-    publishRecord(spark, root, head => {
-      val dirs = dirsOf(head)
-      (dirs, extraFields(spark, root, head, dirs, statsCol, "", precomputed,
-        None, precomputedRows, blooms, opArg = op))
+    publishRecord(spark, root, parent => {
+      nextRecord(spark, root, parent, dirsOf(parent), statsCol = statsCol,
+        precomputed = precomputed, precomputedRows = precomputedRows,
+        blooms = blooms, op = op)
     }).get
 
   /** Full-snapshot commit (also the compaction path): the new version's
@@ -1477,8 +1240,7 @@ object Versioned {
   def commitAppend(spark: SparkSession, root: String, df: DataFrame,
       statsCol: Option[String] = None): Int = {
     val rel = writeDataDir(spark, root, df, statsCol.toSeq)
-    publish(spark, root, head =>
-      (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel,
+    publish(spark, root, _.dirs :+ rel,
       statsCol, op = "append")
   }
 
@@ -1517,8 +1279,7 @@ object Versioned {
       fs(spark, p).delete(p, true)
       throw new CommitRejected(bad)
     }
-    publish(spark, root, head =>
-      (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel,
+    publish(spark, root, _.dirs :+ rel,
       precomputedRows = Map(rel -> counts.getLong(0)), op = "append")
   }
 
@@ -1529,25 +1290,18 @@ object Versioned {
     * rules (the declarative shape: the table owner sets the contract
     * once, every producer inherits it).  Declarations ACCUMULATE; names
     * must be fresh.  Expressions are SQL boolean predicates over the
-    * row (no quotes/braces/backslashes — they live inside the JSON
-    * record). */
+    * row. */
   def commitDeclareChecks(spark: SparkSession, root: String,
       checks: Seq[(String, String)]): Int = {
     require(checks.nonEmpty, "no checks to declare")
-    checks.foreach { case (n, e) =>
-      require(n.nonEmpty && !s"$n$e".exists(c => c == '"' || c == '{' || c == '}' || c == '\\'),
-        s"check '$n' carries characters the record cannot hold")
-    }
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
-      val existing = checksOf(spark, root, head)
+    require(checks.forall(_._1.nonEmpty), "check names must be non-empty")
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
+      val existing = parent.checks
       val clash = checks.map(_._1).toSet intersect existing.map(_._1).toSet
       require(clash.isEmpty, s"checks already declared: ${clash.mkString(", ")}")
-      val frag = (existing ++ checks)
-        .map { case (n, e) => s""""$n":"$e"""" }.mkString(",")
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        checksArg = Some(frag), opArg = "declare"))
+      nextRecord(spark, root, parent, parent.dirs,
+        checks = Some(existing ++ checks), op = "declare")
     }).get
   }
 
@@ -1592,8 +1346,9 @@ object Versioned {
     while (attempt < 5) {
       attempt += 1
       val head0 = currentVersion(spark, root)
+      val rec0 = recordAt(spark, root, head0)
       // persisted contract rides along (audited on the staged bytes)
-      val declared = checksOf(spark, root, head0)
+      val declared = rec0.checks
       if (declared.nonEmpty) {
         val cs = declared.map { case (nm, e) => nm -> expr(e) }
         val counts = staged.agg(count(lit(1)),
@@ -1614,11 +1369,11 @@ object Versioned {
         val bounds = staged.agg(min(tryLong(key)), max(tryLong(key)),
           count(when(tryLong(key).isNull && col(key).isNotNull, 1))).head()
         val existing =
-          if (statsColOf(spark, root, head0).contains(key) &&
+          if (rec0.statsCol.contains(key) &&
               !bounds.isNullAt(0) && !bounds.isNullAt(1) &&
               bounds.getLong(2) == 0L)
             readRange(spark, root, head0, bounds.getLong(0), bounds.getLong(1))
-          else if (statsColsOf(spark, root, head0).contains(key) &&
+          else if (rec0.statsCols.contains(key) &&
               !bounds.isNullAt(0) && !bounds.isNullAt(1) &&
               bounds.getLong(2) == 0L)
             readRangeOn(spark, root, head0, key, bounds.getLong(0), bounds.getLong(1))
@@ -1628,12 +1383,11 @@ object Versioned {
         if (nClash > 0) reject(Map("key_exists" -> nClash))
       }
       val v = publishRecord(spark, root,
-        head => {
-          val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel
-          (dirs, extraFields(spark, root, head, dirs, None, "",
-            precomputedRows = Map(rel -> n), opArg = "append"))
+        parent => {
+          val dirs = parent.dirs :+ rel
+          nextRecord(spark, root, parent, dirs, precomputedRows = Map(rel -> n), op = "append")
         },
-        abortIf = head => head != head0) // new head: re-probe its keys
+        abortIf = _.version != head0) // new head: re-probe its keys
       v match {
         case Some(ver) => return ver
         case None => () // retry loop re-probes against the moved head
@@ -1664,7 +1418,8 @@ object Versioned {
       attempt += 1
       val head0 = currentVersion(spark, root)
       require(head0 > 0, s"no committed version at $root")
-      val dirs0 = manifest(spark, root, head0)
+      val rec0 = recordAt(spark, root, head0)
+      val dirs0 = rec0.dirs
       // file identity comes from the _metadata projection, not
       // input_file_name(): under live deletion vectors the read is a
       // JOINED plan, where input_file_name() is undefined (it could name
@@ -1694,25 +1449,29 @@ object Versioned {
       // old vectors, dropping the dir and its entries) would resurrect
       // the freshly-deleted rows.  Abort on either, reclaim the staged
       // rewrite, and RETRY the whole update against the new head.
-      val dv0 = dvOf(spark, root, head0)
+      val dv0 = rec0.dv
       val v = publishRecord(spark, root,
-        head => {
-          val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-            .filterNot(touched) ++ rewritten._1
-          (dirs, extraFields(spark, root, head, dirs, None, "",
-            rewritten._2, None, rewritten._3, rewritten._4, opArg = "update"))
+        parent => {
+          val dirs = parent.dirs.filterNot(touched) ++ rewritten._1
+          nextRecord(spark, root, parent, dirs, precomputed = rewritten._2,
+            precomputedRows = rewritten._3, blooms = rewritten._4, op = "update")
         },
-        abortIf = head => head != head0 && {
-          val m = manifest(spark, root, head).toSet
-          val dvH = dvOf(spark, root, head)
-          touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-        })
+        abortIf = parent => parent.version != head0 && touchedMoved(parent, touched, dv0))
       v match {
         case Some(ver) => return ver
         case None => reclaimStaged(spark, root, rewritten._1)
       }
     }
     throw new IllegalStateException(s"update conflict not resolving at $root")
+  }
+
+  /** The conflict test of every rewrite path: did the commit now at
+    * `head` replace one of `dirs`, or change its deletion vectors away
+    * from `dv0` (the state the rewrite was computed under)? */
+  private[io] def touchedMoved(head: LogRecord, dirs: Iterable[String],
+      dv0: Map[String, Seq[String]]): Boolean = {
+    val m = head.dirs.toSet
+    dirs.exists(d => !m.contains(d) || head.dv.get(d) != dv0.get(d))
   }
 
   /** Delete the staged base dirs behind a set of `_d=i` rewrite entries
@@ -1757,7 +1516,8 @@ object Versioned {
       attempt += 1
       val head0 = currentVersion(spark, root)
       require(head0 > 0, s"no committed version at $root")
-      val dirs0 = manifest(spark, root, head0)
+      val rec0 = recordAt(spark, root, head0)
+      val dirs0 = rec0.dirs
       val rel = s"data/${java.util.UUID.randomUUID()}"
       readDirsDv(spark, root, head0, dirs0, keepPos = true, dvV = head0)
         .filter(pred).select(col("_dvf"), col("_dvp"))
@@ -1777,22 +1537,17 @@ object Versioned {
           s"matched file $f attributes to no manifest dir of $root"))
       }.map { case (d, fc) => d -> fc.map(_._2).sum }
       val touched = perDir.keySet
-      val dv0 = dvOf(spark, root, head0)
+      val dv0 = rec0.dv
       val v = publishRecord(spark, root,
-        head => {
-          val dirs = manifest(spark, root, head)
-          (dirs, extraFields(spark, root, head, dirs, None, "",
-            dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, opArg = "delete"))
+        parent => {
+          nextRecord(spark, root, parent, parent.dirs,
+            dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, op = "delete")
         },
         // our positions are only valid against head0's copy AND head0's
         // vector state of each touched dir: a concurrent rewrite orphans
         // them (silent resurrect), a concurrent MOR delete could list
         // the same position twice (dvRows double-count) — retry on both
-        abortIf = head => head != head0 && {
-          val m = manifest(spark, root, head).toSet
-          val dvH = dvOf(spark, root, head)
-          touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-        })
+        abortIf = parent => parent.version != head0 && touchedMoved(parent, touched, dv0))
       v match {
         case Some(ver) => return ver
         case None => reclaimStaged(spark, root, Seq(rel))
@@ -1832,7 +1587,7 @@ object Versioned {
       base: String, part: String, rels: Seq[String],
       leafSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : Option[(String, Int, Map[String, String])] = {
-    val declOpt = if (head0 == 0) None else bloomColOf(spark, root, head0)
+    val declOpt = bloomColOf(spark, root, head0)
     declOpt.flatMap { case (decl, bits) =>
       val Tok = """_tok\(([^()]+)\)""".r
       val df = leafSchema
@@ -1866,7 +1621,7 @@ object Versioned {
     * set): the ingest-side filter build verbatim. */
   private def bloomForDir(spark: SparkSession, root: String, head0: Int,
       rel: String): Option[(String, Int, Map[String, String])] = {
-    val declOpt = if (head0 == 0) None else bloomColOf(spark, root, head0)
+    val declOpt = bloomColOf(spark, root, head0)
     declOpt.flatMap { case (decl, bits) =>
       val Tok = """_tok\(([^()]+)\)""".r
       val df = readParquetDirs(spark, Seq(dataPath(root, rel)))
@@ -2087,7 +1842,8 @@ object Versioned {
       return None
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val dirs0 = manifest(spark, root, head0)
+    val rec0 = recordAt(spark, root, head0)
+    val dirs0 = rec0.dirs
     // LOCALIZE a provably-small key set once (see localizeKeys): every
     // action below then broadcasts it driver-side with no per-action
     // rebuild job; past the cap the distributed plan runs verbatim
@@ -2111,7 +1867,7 @@ object Versioned {
     // projection (reliable where input_file_name is not).  Dirs that
     // NULL-FILL the merge key — an add event recorded them — can never
     // match and are skipped without scanning.
-    val keyless = altersOf(spark, root, head0)
+    val keyless = rec0.alters
       .filter(a => keys.contains(a._1) && a._2 != "#rename" && a._2 != "#drop")
       .flatMap(_._3).toSet
     val scanDirs = candidates.filterNot(keyless)
@@ -2132,26 +1888,21 @@ object Versioned {
     // index maintenance: the upsert dir gets its own filter entry, so a
     // merged-in key stays point-probeable without a conservative read
     val bloomAdd = bloomUnion(rewritten._4, bloomForDir(spark, root, head0, newDir))
-    val more = batchId.map(b => s""","batchId":$b""").getOrElse("")
     // abort on (a) a racing replay carrying our batch fence, or (b) a
     // concurrent commit that replaced one of OUR touched dirs — or
     // changed their deletion-vector state (the rewrite would resurrect
     // those deletes) — the commitUpdate conflict discipline: (a) is
     // terminal, (b) retries
-    val dv0 = dvOf(spark, root, head0)
-    val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(touched) ++ rewritten._1 :+ newDir
-        (dirs, extraFields(spark, root, head, dirs, None, more,
-          rewritten._2, None, rewritten._3, bloomAdd, opArg = "merge"))
+    val dv0 = rec0.dv
+    val v = publishRecord(spark, root, parent => {
+        val dirs = parent.dirs.filterNot(touched) ++ rewritten._1 :+ newDir
+        nextRecord(spark, root, parent, dirs, precomputed = rewritten._2,
+          precomputedRows = rewritten._3, blooms = bloomAdd, op = "merge")
+          .copy(batchId = batchId)
       },
-      abortIf = head =>
+      abortIf = parent =>
         batchId.exists(b => lastBatchId(spark, root).exists(_ >= b)) ||
-          (head != head0 && {
-            val m = manifest(spark, root, head).toSet
-            val dvH = dvOf(spark, root, head)
-            touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-          }))
+          (parent.version != head0 && touchedMoved(parent, touched, dv0)))
     v match {
       case Some(_) => v
       case None =>
@@ -2266,7 +2017,8 @@ object Versioned {
       return None
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val dirs0 = manifest(spark, root, head0)
+    val rec0 = recordAt(spark, root, head0)
+    val dirs0 = rec0.dirs
     // an EXPLICIT key set may exceed the updates' own keys: the extras
     // are true deletes — vectored wherever they live, never re-landed
     // (the applyChanges eviction semantics, merge-on-read form)
@@ -2282,7 +2034,7 @@ object Versioned {
     // composite keys confining conjunctively
     val candidates = keys.foldLeft(dirs0)((ds, k) =>
       keyConfinedDirs(spark, root, head0, ds, keysDfX, k, keysLocal))
-    val keyless = altersOf(spark, root, head0)
+    val keyless = rec0.alters
       .filter(a => keys.contains(a._1) && a._2 != "#rename" && a._2 != "#drop")
       .flatMap(_._3).toSet
     val scanDirs = candidates.filterNot(keyless)
@@ -2314,22 +2066,17 @@ object Versioned {
     // index maintenance: the MOR upsert dir gets its own filter entry
     val bloomAdd = bloomForDir(spark, root, head0, newDir)
     val touched = perDir.keySet
-    val dv0 = dvOf(spark, root, head0)
-    val more = batchId.map(b => s""","batchId":$b""").getOrElse("")
+    val dv0 = rec0.dv
     val v = publishRecord(spark, root,
-      head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ newDir
-        (dirs, extraFields(spark, root, head, dirs, None, more,
-          blooms = bloomAdd,
-          dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, opArg = "merge"))
+      parent => {
+        val dirs = parent.dirs :+ newDir
+        nextRecord(spark, root, parent, dirs, blooms = bloomAdd,
+          dvAdd = perDir.map { case (d, n) => d -> (Seq(rel), n) }, op = "merge")
+          .copy(batchId = batchId)
       },
-      abortIf = head =>
+      abortIf = parent =>
         batchId.exists(b => lastBatchId(spark, root).exists(_ >= b)) ||
-          (head != head0 && {
-            val m = manifest(spark, root, head).toSet
-            val dvH = dvOf(spark, root, head)
-            touched.exists(d => !m.contains(d) || dvH.get(d) != dv0.get(d))
-          }))
+          (parent.version != head0 && touchedMoved(parent, touched, dv0)))
     v match {
       case Some(_) => v
       case None =>
@@ -2356,22 +2103,20 @@ object Versioned {
       s"unsupported characters in column name $colName")
     require(!sqlType.contains("|") && !sqlType.contains("\"") && !sqlType.startsWith("#"),
       s"unsupported SQL type $sqlType")
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
       // a duplicate add would make readDirs null-fill OVER the real
       // column values of every pre-alter dir — silent data loss.
       // Re-adding a DROPPED name is legal: the per-generation event
       // order (drop, then fresh null-fill) keeps the old values dead.
-      val events = altersOf(spark, root, head).filter(_._1 == colName)
+      val prior = parent.alters
+      val events = prior.filter(_._1 == colName)
       require(events.isEmpty || events.last._2 == "#drop",
         s"column $colName was already altered into $root")
-      require(!readAt(spark, root, head).columns.contains(colName),
+      require(!readAt(spark, root, parent.version).columns.contains(colName),
         s"column $colName already exists in $root's schema")
-      val dirs = manifest(spark, root, head)
-      val entry = s""""$colName|$sqlType":"${dirs.mkString(",")}""""
-      val frag = altersFragOf(spark, root, head).filter(_.nonEmpty)
-        .map(p => s"$p,$entry").getOrElse(entry)
-      (dirs, extraFields(spark, root, head, dirs, None, "", Map.empty, Some(frag), opArg = "alter"))
+      nextRecord(spark, root, parent, parent.dirs,
+        alters = Some(prior :+ ((colName, sqlType, parent.dirs.toSet))), op = "alter")
     }).get
   }
 
@@ -2384,9 +2129,8 @@ object Versioned {
     * surfaces from the data — callers must retire or migrate those
     * first (a plain 1-D statsCol RENAME is the exception: the rename
     * commit rewrites the field, see [[commitAlterRename]]). */
-  private def indexReferences(spark: SparkSession, root: String, head: Int,
-      colName: String): Boolean = {
-    val z2Ref = statsColOf(spark, root, head).exists {
+  private def indexReferences(head: LogRecord, colName: String): Boolean = {
+    val z2Ref = head.statsCol.exists {
       case Z2(x, y, _) => x == colName || y == colName
       case _           => false
     }
@@ -2398,9 +2142,8 @@ object Versioned {
     // The declared metadata-SUM column joins the same discipline: its
     // per-dir entries were measured under this physical name, and a
     // drop-then-re-add would leave sumAt answering from stale bytes.
-    z2Ref || bloomColOf(spark, root, head).exists(_._1 == colName) ||
-      statsColsOf(spark, root, head).contains(colName) ||
-      sumColOf(spark, root, head).contains(colName)
+    z2Ref || head.bloomCol.contains(colName) ||
+      head.statsCols.contains(colName) || head.sumCol.contains(colName)
   }
 
   /** Schema evolution: RENAME a column — a pure metadata commit.  Dirs
@@ -2416,28 +2159,26 @@ object Versioned {
       newName: String): Int = {
     require(alterNameOk(oldName) && alterNameOk(newName),
       s"unsupported characters in column name $oldName/$newName")
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
-      val cols = readAt(spark, root, head).columns
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
+      val cols = readAt(spark, root, parent.version).columns
       require(cols.contains(oldName), s"no column $oldName in $root's schema")
       require(!cols.contains(newName), s"column $newName already exists in $root")
-      require(!indexReferences(spark, root, head, oldName),
+      require(!indexReferences(parent, oldName),
         s"$oldName is referenced by $root's zone maps or bloom index; retire it first")
-      val dirs = manifest(spark, root, head)
-      val entry = s""""$oldName>$newName|#rename":"${dirs.mkString(",")}""""
-      val frag = altersFragOf(spark, root, head).filter(_.nonEmpty)
-        .map(p => s"$p,$entry").getOrElse(entry)
+      val dirs = parent.dirs
+      val events = parent.alters :+ ((s"$oldName>$newName", "#rename", dirs.toSet))
       // the 1-D zone map follows the rename in the SAME commit.  The
       // parent's per-dir [min,max] are passed as PRECOMPUTED entries:
-      // the extraFields re-declaration guard rightly refuses to carry
+      // the nextRecord re-declaration guard rightly refuses to carry
       // parent stats across a statsCol name change, but a rename is the
       // one case where the old entries stay valid verbatim — same
       // measurements, new name
-      val statsFollow = statsColOf(spark, root, head)
+      val statsFollow = parent.statsCol
         .filter(_ == oldName).map(_ => newName)
-      (dirs, extraFields(spark, root, head, dirs, statsFollow, "",
-        if (statsFollow.isDefined) dirStats(spark, root, head) else Map.empty,
-        Some(frag), opArg = "alter"))
+      nextRecord(spark, root, parent, dirs, statsCol = statsFollow,
+        precomputed = if (statsFollow.isDefined) parent.stats else Map.empty,
+        alters = Some(events), op = "alter")
     }).get
   }
 
@@ -2451,18 +2192,16 @@ object Versioned {
     * surfaces would point at a ghost. */
   def commitAlterDrop(spark: SparkSession, root: String, colName: String): Int = {
     require(alterNameOk(colName), s"unsupported characters in column name $colName")
-    publishRecord(spark, root, head => {
-      require(head > 0, s"no committed version at $root")
-      require(readAt(spark, root, head).columns.contains(colName),
+    publishRecord(spark, root, parent => {
+      require(parent.version > 0, s"no committed version at $root")
+      require(readAt(spark, root, parent.version).columns.contains(colName),
         s"no column $colName in $root's schema")
-      require(!statsColOf(spark, root, head).contains(colName) &&
-        !indexReferences(spark, root, head, colName),
+      require(!parent.statsCol.contains(colName) &&
+        !indexReferences(parent, colName),
         s"$colName is a $root zone-map/bloom column; retire or re-cluster first")
-      val dirs = manifest(spark, root, head)
-      val entry = s""""$colName|#drop":"${dirs.mkString(",")}""""
-      val frag = altersFragOf(spark, root, head).filter(_.nonEmpty)
-        .map(p => s"$p,$entry").getOrElse(entry)
-      (dirs, extraFields(spark, root, head, dirs, None, "", Map.empty, Some(frag), opArg = "alter"))
+      nextRecord(spark, root, parent, parent.dirs,
+        alters = Some(parent.alters :+ ((colName, "#drop", parent.dirs.toSet))),
+        op = "alter")
     }).get
   }
 
@@ -2485,7 +2224,16 @@ object Versioned {
     * the plain scan: zero overhead on tables that never MOR-delete. */
   private def readDirsDv(spark: SparkSession, root: String, v: Int,
       dirs: Seq[String], keepPos: Boolean, dvV: Int): DataFrame = {
-    val dv = dvOf(spark, root, dvV).filter { case (d, _) => dirs.contains(d) }
+    val dvRec = recordAt(spark, root, dvV)
+    scanDirs(spark, root, if (v == dvV) dvRec else recordAt(spark, root, v),
+      dirs, keepPos, dvRec)
+  }
+
+  /** [[readDirsDv]] over decoded records: `rec` supplies the schema
+    * (alters), `dvRec` the deletion vectors. */
+  private def scanDirs(spark: SparkSession, root: String, rec: LogRecord,
+      dirs: Seq[String], keepPos: Boolean, dvRec: LogRecord): DataFrame = {
+    val dv = dvRec.dv.filter { case (d, _) => dirs.contains(d) }
     // generation-grouped scan of a dir subset, optionally carrying the
     // (file, row position) identity columns
     def scanGens(ds: Seq[String], withPos: Boolean): DataFrame = {
@@ -2497,7 +2245,7 @@ object Versioned {
           df.select(col("*"), col("_metadata.file_path").as("_dvf"),
             col("_metadata.row_index").as("_dvp"))
         }
-      val alters = altersOf(spark, root, v)
+      val alters = rec.alters
       if (alters.isEmpty) proj(readParquetDirs(spark, ds.map(dataPath(root, _))))
       else {
         val groups = ds.groupBy(d => alters.filter(_._3.contains(d)).map(a => (a._1, a._2)))
@@ -2531,7 +2279,7 @@ object Versioned {
       .select(col("_dvf"), col("_dvp"))
     // sidecars are O(deleted rows); broadcast while the metadata says
     // they are small, fall back to a shuffled anti join past that
-    val nDel = dvRowsOf(spark, root, dvV)
+    val nDel = dvRec.dvRows
       .filter { case (d, _) => dirs.contains(d) }.values.sum
     val delB = if (nDel <= 2000000L) broadcast(del) else del
     val vecApplied = scanGens(vecDirs, withPos = true)
@@ -2568,26 +2316,24 @@ object Versioned {
     * `spark.graft.readAtBroadcastHint=false` (default true). */
   def readAt(spark: SparkSession, root: String, v: Int): DataFrame = {
     // ONE record read serves the manifest AND the sizing fields below
-    val rec = recOpt(spark, root, v).getOrElse(
-      throw new IllegalArgumentException(s"version $v of $root has no record"))
-    val dirs = parseManifest(rec)
+    if (v == 0) throw new IllegalArgumentException(s"version $v of $root has no record")
+    val rec = recordAt(spark, root, v)
+    val dirs = rec.dirs
     require(dirs.nonEmpty, s"version $v of $root has no data")
-    val df = readDirs(spark, root, v, dirs)
-    val thresh = try spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      .replace("b", "").replace("B", "") match {
-        case s if s.endsWith("k") || s.endsWith("K") => s.dropRight(1).toLong << 10
-        case s if s.endsWith("m") || s.endsWith("M") => s.dropRight(1).toLong << 20
-        case s if s.endsWith("g") || s.endsWith("G") => s.dropRight(1).toLong << 30
-        case s => s.toLong
-      } catch { case _: NumberFormatException => -1L }
+    val df = scanDirs(spark, root, rec, dirs, keepPos = false, rec)
+    // Spark's own byte-string grammar; an unparseable value (e.g. -1)
+    // means no hint
+    val thresh = try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+      catch { case _: NumberFormatException => -1L }
     if (thresh <= 0) return df
     // opt-out for consumers that expand the frame before joining (see
     // the scaladoc caveat): a forced-broadcast hint on an exploded read
     // is an executor OOM AQE cannot demote its way out of
     if (!spark.conf.get("spark.graft.readAtBroadcastHint", "true").toBoolean)
       return df
-    val known = parseDirRows(rec)
-    val bytes = parseDirBytes(rec)
+    val known = rec.rows
+    val bytes = rec.bytes
     if (!dirs.forall(d => known.contains(d) && bytes.contains(d))) return df
     // LIVE bytes = recorded on-disk bytes scaled by the live-row fraction
     // (deletion vectors kill rows without touching files).  Real file
@@ -2596,7 +2342,7 @@ object Versioned {
     // gigabytes.  Compressed parquet bytes is the same currency
     // Catalyst's own file-size estimate uses for this threshold.
     val total = dirs.map(known).sum
-    val live = total - dirs.flatMap(parseDvRows(rec).get).sum
+    val live = total - dirs.flatMap(rec.dvRows.get).sum
     val estBytes =
       if (total <= 0 || live < 0) Long.MaxValue
       else (dirs.map(bytes).sum.toDouble * live / total).toLong
@@ -2612,13 +2358,13 @@ object Versioned {
     * range filter is still applied to the rows read, so the result is
     * correct whatever the zone map prunes. */
   def readRange(spark: SparkSession, root: String, v: Int, lo: Long, hi: Long): DataFrame = {
-    val colName = statsColOf(spark, root, v).getOrElse(
+    val rec = recordAt(spark, root, v)
+    val colName = rec.statsCol.getOrElse(
       throw new IllegalArgumentException(s"$root has no zone-map column; commit with statsCol"))
     require(Z2.findFirstIn(colName).isEmpty,
       s"$root keeps a 2-D zone map ($colName); use Zonemap2D.readRange2")
-    val st = dirStats(spark, root, v)
-    val keep = manifest(spark, root, v)
-      .filter(d => st.get(d).forall { case (a, b) => b >= lo && a <= hi })
+    val keep = rec.dirs
+      .filter(d => rec.stats.get(d).forall { case (a, b) => b >= lo && a <= hi })
     val base =
       if (keep.isEmpty) readAt(spark, root, v).limit(0)
       else readDirs(spark, root, v, keep)
@@ -2657,19 +2403,15 @@ object Versioned {
     import spark.implicits._
     val head = currentVersion(spark, root)
     (lowestVersion(spark, root, head) to head).map { v =>
-      val txt = recordText(spark, root, v)
-      val ts = """"ts":\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      val bid = """"batchId":\s*(-?\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      val dirs = manifest(spark, root, v)
+      val rec = recordAt(spark, root, v)
+      val dirs = rec.dirs
       // metadata row count when every dir carries one (legacy dirs don't);
       // deletion-vector cardinalities subtract, as in countAt
-      val known = dirRows(spark, root, v)
-      val deleted = dvRowsOf(spark, root, v)
       val nRows =
-        if (dirs.forall(known.contains))
-          Some(dirs.map(known).sum - dirs.flatMap(deleted.get).sum)
+        if (dirs.forall(rec.rows.contains))
+          Some(dirs.map(rec.rows).sum - dirs.flatMap(rec.dvRows.get).sum)
         else None
-      (v, ts, parseOp(txt), dirs.size, nRows, bid)
+      (v, Some(rec.ts), rec.op, dirs.size, nRows, rec.batchId)
     }.toDF("version", "ts_ms", "op", "n_dirs", "n_rows", "batch_id")
   }
 
@@ -2685,8 +2427,7 @@ object Versioned {
   def commitAppendClustered(spark: SparkSession, root: String, df: DataFrame,
       statsCol: String, buckets: Int = 16): Int = {
     val (rels, pre, rows, blooms) = writeClustered(spark, root, df, statsCol, buckets)
-    publish(spark, root, head =>
-      (if (head == 0) Seq.empty else manifest(spark, root, head)) ++ rels,
+    publish(spark, root, _.dirs ++ rels,
       Some(statsCol), pre, rows, blooms, op = "append")
   }
 
@@ -2700,7 +2441,8 @@ object Versioned {
       buckets: Int = 16): Option[Int] = {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val dirs0 = manifest(spark, root, head0).toSet
+    val rec0 = recordAt(spark, root, head0)
+    val dirs0 = rec0.dirs.toSet
     val (rels, pre, rows, blooms) = writeClustered(spark, root,
       readAt(spark, root, head0), statsCol, buckets)
     // concurrent appends carry through; a concurrent CoW commit that
@@ -2709,19 +2451,14 @@ object Versioned {
     // attaching a vector to one (the fold read the OLD vector state and
     // would drop the new entry with the dir) — same discipline as
     // optimize
-    val dvC0 = dvOf(spark, root, head0)
+    val dvC0 = rec0.dv
     val v = publishRecord(spark, root,
-      head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(dirs0) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, Some(statsCol), "", pre,
-          None, rows, blooms, opArg = "optimize"))
+      parent => {
+        val dirs = parent.dirs.filterNot(dirs0) ++ rels
+        nextRecord(spark, root, parent, dirs, statsCol = Some(statsCol),
+          precomputed = pre, precomputedRows = rows, blooms = blooms, op = "optimize")
       },
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !dirs0.subsetOf(m) || dirs0.exists(d => dvH.get(d) != dvC0.get(d))
-      })
+      abortIf = parent => parent.version != head0 && touchedMoved(parent, dirs0, dvC0))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(
         dataPath(root, rels.head.split("/").take(2).mkString("/")))
@@ -2759,13 +2496,14 @@ object Versioned {
       buckets: Int = 16, maxCover: Int = 2): Option[Int] = {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
+    val rec0 = recordAt(spark, root, head0)
     // the overlap sweep reads the manifest's [min,max] entries, which
     // are only meaningful for the column they were measured under
-    require(statsColOf(spark, root, head0).forall(_ == statsCol),
-      s"$root's zone map is on ${statsColOf(spark, root, head0).get}; " +
+    require(rec0.statsCol.forall(_ == statsCol),
+      s"$root's zone map is on ${rec0.statsCol.get}; " +
         "re-cluster via compactClustered before optimizing on a different column")
-    val dirs0 = manifest(spark, root, head0)
-    val st = dirStats(spark, root, head0)
+    val dirs0 = rec0.dirs
+    val st = rec0.stats
     val known = dirs0.flatMap(d => st.get(d).map(d -> _)).sortBy(_._2._1)
     val comps = scala.collection.mutable.ArrayBuffer[Vector[String]]()
     var cur = Vector.empty[String]
@@ -2791,19 +2529,14 @@ object Versioned {
     // read the old vector state, so publishing would resurrect the new
     // deletes.  Both checks re-evaluate against the head the rename
     // will land on.
-    val dvO0 = dvOf(spark, root, head0)
+    val dvO0 = rec0.dv
     val v = publishRecord(spark, root,
-      head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(foldSet) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, Some(statsCol), "", pre,
-          None, rows, blooms, opArg = "optimize"))
+      parent => {
+        val dirs = parent.dirs.filterNot(foldSet) ++ rels
+        nextRecord(spark, root, parent, dirs, statsCol = Some(statsCol),
+          precomputed = pre, precomputedRows = rows, blooms = blooms, op = "optimize")
       },
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !foldSet.subsetOf(m) || fold.exists(d => dvH.get(d) != dvO0.get(d))
-      })
+      abortIf = parent => parent.version != head0 && touchedMoved(parent, fold, dvO0))
     if (v.isEmpty) { // aborted: reclaim the staged fold
       val p = new org.apache.hadoop.fs.Path(
         dataPath(root, rels.head.split("/").take(2).mkString("/")))
@@ -2831,8 +2564,9 @@ object Versioned {
     require(smallRows <= targetRows, "smallRows must not exceed targetRows")
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    require(statsColOf(spark, root, head0).forall(_ == statsCol),
-      s"$root's zone map is on ${statsColOf(spark, root, head0).get}; " +
+    val rec0 = recordAt(spark, root, head0)
+    require(rec0.statsCol.forall(_ == statsCol),
+      s"$root's zone map is on ${rec0.statsCol.get}; " +
         "re-cluster via compactClustered before optimizing on a different column")
     smallFoldImpl(spark, root, statsCol, smallRows, targetRows,
       declare = true, head0)
@@ -2852,9 +2586,10 @@ object Versioned {
     require(smallRows <= targetRows, "smallRows must not exceed targetRows")
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    require(statsColOf(spark, root, head0).isEmpty,
+    val rec0 = recordAt(spark, root, head0)
+    require(rec0.statsCol.isEmpty,
       s"$root has a clustered statsCol; use optimizeSmall")
-    require(statsColsOf(spark, root, head0).contains(colName),
+    require(rec0.statsCols.contains(colName),
       s"$colName is not a declared zone-map member of $root")
     smallFoldImpl(spark, root, colName, smallRows, targetRows,
       declare = false, head0)
@@ -2863,8 +2598,9 @@ object Versioned {
   private def smallFoldImpl(spark: SparkSession, root: String,
       foldCol: String, smallRows: Long, targetRows: Long,
       declare: Boolean, head0: Int): Option[Int] = {
-    val dirs0 = manifest(spark, root, head0)
-    val rows = dirRows(spark, root, head0)
+    val rec0 = recordAt(spark, root, head0)
+    val dirs0 = rec0.dirs
+    val rows = rec0.rows
     val fold = dirs0.filter(d => rows.get(d).forall(_ < smallRows))
     if (fold.size < 2) return None // nothing to defragment
     val sum = fold.flatMap(rows.get).sum
@@ -2876,22 +2612,17 @@ object Versioned {
     val (rels, pre, nRows, blooms) = writeClustered(spark, root,
       readDirs(spark, root, head0, fold), foldCol, buckets)
     val foldSet = fold.toSet
-    val dvS0 = dvOf(spark, root, head0)
+    val dvS0 = rec0.dv
     val v = publishRecord(spark, root,
-      head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head))
-          .filterNot(foldSet) ++ rels
-        (dirs, extraFields(spark, root, head, dirs,
-          if (declare) Some(foldCol) else None, "", pre,
-          None, nRows, blooms, opArg = "optimize"))
+      parent => {
+        val dirs = parent.dirs.filterNot(foldSet) ++ rels
+        nextRecord(spark, root, parent, dirs,
+          statsCol = if (declare) Some(foldCol) else None, precomputed = pre,
+          precomputedRows = nRows, blooms = blooms, op = "optimize")
       },
       // same conflict discipline as optimizeClustered: a concurrent
       // commit replacing a fold dir, or vectoring one, aborts
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !foldSet.subsetOf(m) || fold.exists(d => dvH.get(d) != dvS0.get(d))
-      })
+      abortIf = parent => parent.version != head0 && touchedMoved(parent, fold, dvS0))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(
         dataPath(root, rels.head.split("/").take(2).mkString("/")))
@@ -2934,15 +2665,16 @@ object Versioned {
       s"maxDvFraction must be in (0,1), got $maxDvFraction")
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    val deleted = dvRowsOf(spark, root, head0)
+    val rec0 = recordAt(spark, root, head0)
+    val deleted = rec0.dvRows
     if (deleted.isEmpty) return None // healthy: zero I/O
-    val dirs0 = manifest(spark, root, head0)
+    val dirs0 = rec0.dirs
     require(!dirs0.exists { d =>
       val p = new org.apache.hadoop.fs.Path(s"${dataPath(root, d)}/_vec.json")
       fs(spark, p).exists(p)
     }, s"$root is a vector-index table; its cell rewrite is " +
       "VectorIndex.optimizeCells — a generic rewrite would orphan the sidecars")
-    val rows = dirRows(spark, root, head0)
+    val rows = rec0.rows
     // a dir with vectors but no recorded row count (legacy) is flagged
     // too: its fraction is unprovable without I/O and it pays the
     // anti-join tax on every read
@@ -2964,7 +2696,7 @@ object Versioned {
       .map(st => s"$base/${st.getPath.getName}").sorted.toSeq
     // per-new-dir stats + row counts in ONE batched job (the
     // writeClustered pattern); bloom entries via the shared staged path
-    val sc = statsColOf(spark, root, head0)
+    val sc = rec0.statsCol
     val (pre, nRows) = if (rels.isEmpty) {
       // every flagged dir was fully deleted: nothing staged, the dirs
       // simply leave the manifest below
@@ -2988,20 +2720,16 @@ object Versioned {
       else bloomsForStaged(spark, root, head0, base, "_rw", rels,
         leafSchema = Some(headFrame.schema))
     val flaggedSet = flagged.toSet
-    val dv0 = dvOf(spark, root, head0)
+    val dv0 = rec0.dv
     val v = publishRecord(spark, root,
-      head => {
-        val dirs = manifest(spark, root, head).filterNot(flaggedSet) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, None, "", pre,
-          None, nRows, blooms, opArg = "reorg"))
+      parent => {
+        val dirs = parent.dirs.filterNot(flaggedSet) ++ rels
+        nextRecord(spark, root, parent, dirs, precomputed = pre,
+          precomputedRows = nRows, blooms = blooms, op = "reorg")
       },
       // a concurrent commit REPLACING a flagged dir, or changing its
       // vector state, invalidates the staged copy — abort, reclaim
-      abortIf = head => head != head0 && {
-        val m = manifest(spark, root, head).toSet
-        val dvH = dvOf(spark, root, head)
-        !flaggedSet.subsetOf(m) || flagged.exists(d => dvH.get(d) != dv0.get(d))
-      })
+      abortIf = parent => parent.version != head0 && touchedMoved(parent, flagged, dv0))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(s"$root/$base")
       fs(spark, p).delete(p, true)
@@ -3025,21 +2753,21 @@ object Versioned {
   def optimizeIndex(spark: SparkSession, root: String): Option[Int] = {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
-    if (bloomColOf(spark, root, head0).isEmpty) return None
-    val have = dirBlooms(spark, root, head0).keySet
-    val missing = manifest(spark, root, head0).filterNot(have)
+    val rec0 = recordAt(spark, root, head0)
+    if (rec0.bloomDecl.isEmpty) return None
+    val have = rec0.bloom.keySet
+    val missing = rec0.dirs.filterNot(have)
     if (missing.isEmpty) return None
     val entries = missing.flatMap(d =>
       bloomForDir(spark, root, head0, d).map(_._3).getOrElse(Map.empty))
     if (entries.isEmpty) return None // nothing eligible (column absent)
-    val (decl, bits) = bloomColOf(spark, root, head0).get
+    val (decl, bits) = rec0.bloomDecl.get
     // pure metadata publish: dirs are immutable, so the entries stay
-    // valid whatever head the rename lands on (extraFields serializes
+    // valid whatever head the rename lands on (nextRecord records
     // only the dirs still in that manifest)
-    Some(publishRecord(spark, root, head => {
-      val dirs = manifest(spark, root, head)
-      (dirs, extraFields(spark, root, head, dirs, None, "",
-        blooms = Some((decl, bits, entries.toMap)), opArg = "optimize"))
+    Some(publishRecord(spark, root, parent => {
+      nextRecord(spark, root, parent, parent.dirs,
+        blooms = Some((decl, bits, entries.toMap)), op = "optimize")
     }).get)
   }
 
@@ -3075,7 +2803,7 @@ object Versioned {
     * layout (their decisions are manifest metadata), so `maintain` is
     * safe to schedule after every batch; bloom and token-index entries
     * need no routing at all — every rewrite a policy lands re-measures
-    * them in [[extraFields]].  Knobs left unset (-1) resolve through
+    * them in [[nextRecord]].  Knobs left unset (-1) resolve through
     * the table's DECLARED policy ([[commitDeclarePolicy]]) before the
     * global defaults, so a parameterless call does each table's right
     * thing.  Returns the last new version, or None when the table was
@@ -3086,11 +2814,12 @@ object Versioned {
       maxDvFraction: Double = -1.0): Option[Int] = {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
+    val rec0 = recordAt(spark, root, head0)
     // knob resolution: explicit argument > the table's DECLARED policy
     // ([[commitDeclarePolicy]], carried in the head record) > global
     // default — so `maintain(root)` with no knobs does each table's
     // right thing, and a catalog sweep needs no per-member parameters
-    val pol = policyOf(spark, root, head0)
+    val pol = rec0.policy
     val smallRowsR = if (smallRows >= 0L) smallRows
                      else pol.map(_.smallRows).getOrElse(0L)
     val targetRowsR = if (targetRows >= 0L) targetRows
@@ -3099,7 +2828,7 @@ object Versioned {
     val maxCoverR = if (maxCover >= 1) maxCover else pol.map(_.maxCover).getOrElse(2)
     val maxDvFractionR = if (maxDvFraction >= 0.0) maxDvFraction
                          else pol.map(_.maxDvFraction).getOrElse(0.3)
-    val dirs0 = manifest(spark, root, head0)
+    val dirs0 = rec0.dirs
     val isVector = dirs0.exists { d =>
       val p = new org.apache.hadoop.fs.Path(s"${dataPath(root, d)}/_vec.json")
       fs(spark, p).exists(p)
@@ -3116,7 +2845,7 @@ object Versioned {
     // 2-D Morton tables route through the SAME folds: the overlap sweep
     // and range shuffle operate on the Morton code — exactly how the
     // layout was built (Zonemap2DSpec proves box reads stay sharp)
-    val sc = statsColOf(spark, root, head0)
+    val sc = rec0.statsCol
     var last: Option[Int] = None
     if (sc.isDefined) {
       last = optimizeClustered(spark, root, sc.get, bucketsR, maxCoverR)
@@ -3128,7 +2857,7 @@ object Versioned {
       // still fragment: defrag on the FIRST declared column — the fold
       // needs *a* measured expression, and the multi-column map
       // re-measures every member on the fresh dirs
-      statsColsOf(spark, root, head0).headOption.foreach { c =>
+      rec0.statsCols.headOption.foreach { c =>
         optimizeSmallOn(spark, root, c, smallRowsR, tgtRows)
           .foreach(v => last = Some(v))
       }
@@ -3208,84 +2937,11 @@ object Versioned {
     * vacuuming the SOURCE past `v` invalidates clones taken at `v` —
     * keep sources within clone lifetimes, or compact the clone to
     * materialize it. */
-  /** Re-serialize version `v`'s carried record fields — stats, rows,
-    * sums (+ void markers), blooms, alters, CHECK constraints, deletion
-    * vectors — for a SNAPSHOT-REPLAY record (restore, shallow clone,
-    * branch snapshot merge) whose dir names pass through `remap` and
-    * whose DV sidecar names pass through `sideRemap`.  One serializer
-    * for every replay path: a record field added here flows through all
-    * of them, instead of silently vanishing on whichever path forgot it
-    * (which is exactly how the checks/sums fields went missing from
-    * three hand-rolled copies of this block). */
-  private[io] def carryFieldsOf(spark: SparkSession, root: String, v: Int,
-      dirs: Seq[String], remap: String => String = identity,
-      sideRemap: String => String = identity): String = {
-    val vt = recordText(spark, root, v) // ONE read serves every field
-    val st = parseDirStats(vt)
-    val statsJson = parseStatsCol(vt).map { c =>
-      val entries = dirs.flatMap(d =>
-        st.get(d).map { case (a, b) => s""""${remap(d)}":[$a,$b]""" })
-      s""","statsCol":"$c","stats":{${entries.mkString(",")}}"""
-    }.getOrElse("")
-    val mcols = parseStatsCols(vt)
-    val mstatsJson = if (mcols.isEmpty) "" else {
-      val m = parseMstats(vt)
-      val entries = for {
-        c <- mcols; d <- dirs; e <- m.get((c, d))
-      } yield s""""$c|${remap(d)}":[${e._1},${e._2}]"""
-      s""","statsCols":"${mcols.mkString(",")}","mstats":{${entries.mkString(",")}}"""
-    }
-    val rows = parseDirRows(vt)
-    val rowEntries = dirs.flatMap(d => rows.get(d).map(n => s""""${remap(d)}":$n"""))
-    val rowsJson =
-      if (rowEntries.isEmpty) "" else s""","rows":{${rowEntries.mkString(",")}}"""
-    val byt = parseDirBytes(vt)
-    val byteEntries = dirs.flatMap(d => byt.get(d).map(n => s""""${remap(d)}":$n"""))
-    val bytesJson =
-      if (byteEntries.isEmpty) "" else s""","bytes":{${byteEntries.mkString(",")}}"""
-    val sumJson = parseSumCol(vt).map { mc =>
-      val sums = parseDirSums(vt)
-      val entries = dirs.flatMap(d => sums.get(d).map(n => s""""${remap(d)}":$n"""))
-      val void = parseSumVoid(vt).filter(dirs.contains).map(remap)
-      val voidJson =
-        if (void.isEmpty) "" else s""","sumsVoid":"${void.toSeq.sorted.mkString(",")}""""
-      s""","sumCol":"$mc","sums":{${entries.mkString(",")}}$voidJson"""
-    }.getOrElse("")
-    val bl = parseDirBlooms(vt)
-    val bloomJson = parseBloomCol(vt).map { case (c, m) =>
-      val entries = dirs.flatMap(d => bl.get(d).map(b => s""""${remap(d)}":"$b""""))
-      s""","bloomCol":"$c","bloomBits":$m,"bloom":{${entries.mkString(",")}}"""
-    }.getOrElse("")
-    val altersJson = {
-      val entries = parseAlters(vt).map { case (c, t, ds) =>
-        s""""$c|$t":"${ds.toSeq.map(remap).sorted.mkString(",")}""""
-      }
-      if (entries.isEmpty) "" else s""","alters":{${entries.mkString(",")}}"""
-    }
-    val checksJson = parseChecksFrag(vt)
-      .map(c => s""","checks":{$c}""").getOrElse("")
-    // deletion vectors carry remapped: the replay reads the SAME
-    // physical files, so the sidecars' (file, position) identities stay
-    // valid verbatim — only the manifest-facing names change
-    val dvJson = {
-      val dv = parseDv(vt)
-      val dvr = parseDvRows(vt)
-      val keep = dirs.filter(dv.contains)
-      if (keep.isEmpty) ""
-      else {
-        val e = keep.map(d =>
-          s""""${remap(d)}":"${dv(d).map(sideRemap).mkString(",")}"""")
-        val n = keep.map(d => s""""${remap(d)}":${dvr.getOrElse(d, 0L)}""")
-        s""","dv":{${e.mkString(",")}},"dvRows":{${n.mkString(",")}}"""
-      }
-    }
-    s"$statsJson$mstatsJson$rowsJson$bytesJson$sumJson$bloomJson$altersJson$checksJson$dvJson"
-  }
-
   def cloneAt(spark: SparkSession, srcRoot: String, dstRoot: String, v: Int): Int = {
     require(srcRoot.startsWith("/") || srcRoot.contains(":/"),
       s"clone source must be an absolute path: $srcRoot")
-    val orig = manifest(spark, srcRoot, v)
+    val src = recordAt(spark, srcRoot, v)
+    val orig = src.dirs
     require(orig.nonEmpty, s"version $v of $srcRoot has no data")
     // replay-pin the SOURCE dirs across the clone's publish (restore's
     // discipline): a concurrent vacuum on the source past v must either
@@ -3298,11 +2954,10 @@ object Versioned {
           s"version $v of $srcRoot was vacuumed during the clone ($d is gone)")
       }
       val remap: String => String = d => dataPath(srcRoot, d)
-      val carried = carryFieldsOf(spark, srcRoot, v, orig, remap, remap)
-      publishRecord(spark, dstRoot, head => {
-        require(head == 0, s"clone target $dstRoot is not empty")
-        (orig.map(remap),
-          s""","ts":${System.currentTimeMillis()},"op":"clone"$carried""")
+      val carried = src.replay(remap, remap)
+      publishRecord(spark, dstRoot, parent => {
+        require(parent.version == 0, s"clone target $dstRoot is not empty")
+        carried.copy(ts = System.currentTimeMillis(), op = Some("clone"))
       }).get
     }
   }
@@ -3326,7 +2981,8 @@ object Versioned {
     val head0 = currentVersion(spark, root)
     require(head0 > 0, s"no committed version at $root")
     require(v >= 1 && v <= head0, s"cannot restore $root to nonexistent version $v")
-    val dirs = manifest(spark, root, v) // throws if v's record was vacuumed
+    val rec = recordAt(spark, root, v) // throws if v's record was vacuumed
+    val dirs = rec.dirs
     require(dirs.nonEmpty, s"version $v of $root has no data")
     // PIN the referenced dirs across the WHOLE publish, then verify they
     // still exist: a concurrent vacuum whose retention floor passed v
@@ -3342,9 +2998,9 @@ object Versioned {
         require(fs(spark, p).exists(p),
           s"version $v of $root was vacuumed during the restore ($d is gone)")
       }
-      publishRecord(spark, root, head => {
-        val ts = math.max(System.currentTimeMillis(), tsOf(spark, root, head))
-        (dirs, s""","ts":$ts,"op":"restore"${carryFieldsOf(spark, root, v, dirs)}""")
+      publishRecord(spark, root, parent => {
+        val ts = math.max(System.currentTimeMillis(), parent.ts)
+        rec.replay().copy(ts = ts, op = Some("restore"))
       }).get
     }
   }
@@ -3428,7 +3084,7 @@ object Versioned {
     // the refs walk below adds them to the live set.
     val live: Set[String] =
       (floor to head).flatMap(v =>
-        manifest(spark, root, v) ++ dvOf(spark, root, v).values.flatten).toSet ++
+        recordAt(spark, root, v).referencedDirs).toSet ++
         Branches.pinnedByRefs(spark, root)
     val dataDir = new org.apache.hadoop.fs.Path(s"$root/data")
     val f = fs(spark, dataDir)
@@ -3498,7 +3154,7 @@ object Versioned {
       // refs pin exactly as there)
       val live: Set[String] =
         (floor to head).flatMap(v =>
-          manifest(spark, root, v) ++ dvOf(spark, root, v).values.flatten).toSet ++
+          recordAt(spark, root, v).referencedDirs).toSet ++
           Branches.pinnedByRefs(spark, root)
       val dataDir = new org.apache.hadoop.fs.Path(s"$root/data")
       val f = fs(spark, dataDir)
@@ -3567,11 +3223,12 @@ object Versioned {
       df: DataFrame): Option[Int] = {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val rel = writeDataDir(spark, root, df)
-    val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel
-        (dirs, extraFields(spark, root, head, dirs, None, s""","batchId":$batchId""", opArg = "stream-append"))
+    val v = publishRecord(spark, root, parent => {
+        val dirs = parent.dirs :+ rel
+        nextRecord(spark, root, parent, dirs, op = "stream-append")
+          .copy(batchId = Some(batchId))
       },
-      abortIf = head => lastBatchId(spark, root).exists(_ >= batchId))
+      abortIf = parent => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) { // lost to a racing replay that carried our batch
       val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
       fs(spark, p).delete(p, true)
@@ -3595,12 +3252,12 @@ object Versioned {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val rel = writeDataDir(spark, root, df)
     val blooms = bloomForDir(spark, root, currentVersion(spark, root), rel)
-    val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) :+ rel
-        (dirs, extraFields(spark, root, head, dirs, None, s""","batchId":$batchId""",
-          blooms = blooms, opArg = "stream-append"))
+    val v = publishRecord(spark, root, parent => {
+        val dirs = parent.dirs :+ rel
+        nextRecord(spark, root, parent, dirs, blooms = blooms, op = "stream-append")
+          .copy(batchId = Some(batchId))
       },
-      abortIf = head => lastBatchId(spark, root).exists(_ >= batchId))
+      abortIf = parent => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) { // lost to a racing replay that carried our batch
       val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
       fs(spark, p).delete(p, true)
@@ -3619,8 +3276,9 @@ object Versioned {
       df: DataFrame): Option[Int] = {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val rel = writeDataDir(spark, root, df)
-    val v = publishRecord(spark, root, head =>
-        (Seq(rel), extraFields(spark, root, head, Seq(rel), None, s""","batchId":$batchId""", opArg = "stream-snapshot")),
+    val v = publishRecord(spark, root, parent =>
+        nextRecord(spark, root, parent, Seq(rel), op = "stream-snapshot")
+          .copy(batchId = Some(batchId)),
       abortIf = _ => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) {
       val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
@@ -3641,11 +3299,11 @@ object Versioned {
       df: DataFrame, statsCol: String, buckets: Int = 16): Option[Int] = {
     if (lastBatchId(spark, root).exists(_ >= batchId)) return None
     val (rels, pre, rows, blooms) = writeClustered(spark, root, df, statsCol, buckets)
-    val v = publishRecord(spark, root, head => {
-        val dirs = (if (head == 0) Seq.empty else manifest(spark, root, head)) ++ rels
-        (dirs, extraFields(spark, root, head, dirs, Some(statsCol),
-          s""","batchId":$batchId""", precomputed = pre,
-          precomputedRows = rows, blooms = blooms, opArg = "stream-append"))
+    val v = publishRecord(spark, root, parent => {
+        val dirs = parent.dirs ++ rels
+        nextRecord(spark, root, parent, dirs, statsCol = Some(statsCol),
+          precomputed = pre, precomputedRows = rows, blooms = blooms, op = "stream-append")
+          .copy(batchId = Some(batchId))
       },
       abortIf = _ => lastBatchId(spark, root).exists(_ >= batchId))
     if (v.isEmpty) reclaimStaged(spark, root, rels)
@@ -3673,12 +3331,8 @@ object Versioned {
     * between two separate reads would make the pair inconsistent). */
   private[graft] def lastBatchIdAt(spark: SparkSession, root: String, from: Int): Option[Long] = {
     val head = currentVersion(spark, root)
-    (math.min(from, head) to lowestVersion(spark, root, head) by -1).iterator.flatMap { v =>
-      val p = new org.apache.hadoop.fs.Path(logDir(root), f"v$v%05d.json")
-      val in = fs(spark, p).open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      """"batchId":\s*(-?\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    }.nextOption()
+    (math.min(from, head) to lowestVersion(spark, root, head) by -1).iterator
+      .flatMap(recordAt(spark, root, _).batchId).nextOption()
   }
 
   /** Row-level snapshot diff `va → vb`: multiset EXCEPT ALL both ways,
@@ -3692,8 +3346,8 @@ object Versioned {
     * (zero full-table scan), while two unrelated full snapshots degrade
     * gracefully to the complete compare. */
   def diff(spark: SparkSession, root: String, va: Int, vb: Int): DataFrame = {
-    val da = manifest(spark, root, va)
-    val db = manifest(spark, root, vb)
+    val (a, b) = (recordAt(spark, root, va), recordAt(spark, root, vb))
+    val (da, db) = (a.dirs, b.dirs)
     require((da ++ db).nonEmpty, s"diff of two empty versions of $root")
     // both sides read under the NEWER version's schema, so a diff across
     // an alter compares null-filled old rows against full-schema rows
@@ -3703,10 +3357,8 @@ object Versioned {
     // state also matches: a MOR delete between va and vb changes the
     // dir's live rows without changing the manifest entry, and each side
     // must be read under ITS OWN vectors to surface those removals
-    val dvA = dvOf(spark, root, va)
-    val dvB = dvOf(spark, root, vb)
     val cancel = da.toSet.intersect(db.toSet)
-      .filter(d => dvA.get(d) == dvB.get(d))
+      .filter(d => a.dv.get(d) == b.dv.get(d))
     diffOn(spark, root, va, vb, da.filterNot(cancel), db.filterNot(cancel))
   }
 

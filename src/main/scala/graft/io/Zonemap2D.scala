@@ -53,7 +53,8 @@ object Zonemap2D {
     * file listing; the box filter is re-applied to the rows read. */
   def readRange2(spark: SparkSession, root: String, v: Int,
       loX: Long, hiX: Long, loY: Long, hiY: Long): DataFrame = {
-    val sc = Versioned.statsColOf(spark, root, v).getOrElse(
+    val rec = Versioned.recordAt(spark, root, v)
+    val sc = rec.statsCol.getOrElse(
       throw new IllegalArgumentException(s"$root has no zone-map column"))
     val (xc, yc, bits) = sc match {
       case Versioned.Z2(x, y, b) => (x, y, b.toInt)
@@ -63,9 +64,8 @@ object Zonemap2D {
     val side = 1L << bits
     require(0 <= loX && hiX < side && 0 <= loY && hiY < side,
       s"box out of the z-domain [0, $side): ($loX,$hiX)x($loY,$hiY)")
-    val st = Versioned.dirStats(spark, root, v)
-    val keep = Versioned.manifest(spark, root, v).filter(d =>
-      st.get(d).forall { case (zlo, zhi) =>
+    val keep = rec.dirs.filter(d =>
+      rec.stats.get(d).forall { case (zlo, zhi) =>
         zRangeOverlapsBox(zlo, zhi, loX, hiX, loY, hiY, bits)
       })
     val base =

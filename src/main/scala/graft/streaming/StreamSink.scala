@@ -100,7 +100,7 @@ object StreamSink {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevN = try prev.toInt catch { case _: NumberFormatException => -1 }
     if (prevN <= 0) return body // non-numeric session setting: leave it be
-    val n = sys.env.get("GRAFT_STREAM_SHUFFLE_PARTITIONS").map(_.toInt)
+    val n = shufflePartitionsOverride(sys.env.get("GRAFT_STREAM_SHUFFLE_PARTITIONS"))
       .getOrElse {
         val p = new org.apache.hadoop.fs.Path(eventsPath)
         val bytes =
@@ -113,6 +113,16 @@ object StreamSink {
     try body
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  /** The GRAFT_STREAM_SHUFFLE_PARTITIONS override, if set: a positive
+    * integer, or a failure that names the variable. */
+  private[graft] def shufflePartitionsOverride(raw: Option[String]): Option[Int] =
+    raw.map { v =>
+      val n = v.trim.toIntOption.getOrElse(0)
+      require(n >= 1,
+        s"GRAFT_STREAM_SHUFFLE_PARTITIONS must be a positive integer, got '$v'")
+      n
+    }
 
   private def runTumblingSink(spark: SparkSession, eventsPath: String,
       outDir: String, ckptDir: String, maxFilesPerTrigger: Option[Int]): Unit = {

@@ -42,7 +42,7 @@ class BroadcastSizingSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled" -> "false", // isolate PLANNER-time sizing
       "spark.sql.autoBroadcastJoinThreshold" -> "1048576") {
       val hinted = fact.join(Versioned.readAt(spark, root, v), "k")
-      hinted.collect()
+      hinted.write.format("noop").mode("overwrite").save()
       // NB: the deletion-vector anti join inside the dim legitimately
       // broadcasts its tiny sidecar, so "contains BroadcastHashJoin" is
       // not discriminating — the DIM-vs-FACT join shape is: hinted must
@@ -55,7 +55,7 @@ class BroadcastSizingSpec extends AnyFunSuite {
       // proving the hint, not the file size, made the plan
       val raw = fact.join(Versioned.readDirs(spark, root, v,
         Versioned.manifest(spark, root, v)), "k")
-      raw.collect()
+      raw.write.format("noop").mode("overwrite").save()
       assert(raw.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
         "control: static sizing alone must NOT broadcast this footprint")
       // and the answers agree
@@ -78,7 +78,7 @@ class BroadcastSizingSpec extends AnyFunSuite {
       // dim-side decision
       val fact = spark.range(2000000).select((col("id") % 2000L).as("k"))
       val j = fact.join(Versioned.readAt(spark, root, 1), "k")
-      j.collect()
+      j.write.format("noop").mode("overwrite").save()
       assert(j.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
         "real on-disk bytes over the threshold must refuse the hint")
     }
@@ -95,7 +95,7 @@ class BroadcastSizingSpec extends AnyFunSuite {
       // is over the static threshold too -> shuffle join
       val fact = spark.range(200000).select((col("id") % 400L).as("k"))
       val j = fact.join(Versioned.readAt(spark, root, 1), "k")
-      j.collect()
+      j.write.format("noop").mode("overwrite").save()
       assert(j.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
         "an over-threshold live count must not force a broadcast")
     }
@@ -117,7 +117,7 @@ class BroadcastSizingSpec extends AnyFunSuite {
       "spark.sql.autoBroadcastJoinThreshold" -> "1048576",
       "spark.graft.readAtBroadcastHint" -> "false") {
       val j = fact.join(Versioned.readAt(spark, root, v), "k")
-      j.collect()
+      j.write.format("noop").mode("overwrite").save()
       assert(j.queryExecution.executedPlan.toString.contains("SortMergeJoin"),
         "the opt-out must leave the join to static sizing (shuffle)")
     }

@@ -162,7 +162,7 @@ class MaintainSpec extends AnyFunSuite {
     assert(dirs.count(d => rows.get(d).exists(_ < 1000L)) < 2,
       "the declared smallRows threshold must drive the fold")
     assert(Versioned.maintain(spark, root).isEmpty, "steady state under policy")
-    // the policy survives every commit (carried in extraFields)
+    // the policy survives every commit (carried in nextRecord)
     assert(Versioned.policyOf(spark, root, Versioned.currentVersion(spark, root))
       .contains(Versioned.MaintenancePolicy(1000L, 4000L, 16, 2, 0.3)))
     // and the declaration validates its values

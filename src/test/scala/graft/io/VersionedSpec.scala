@@ -352,4 +352,20 @@ class VersionedSpec extends AnyFunSuite {
     assert(Versioned.history(spark, dst).select("op")
       .as[Option[String]].head() == Some("clone"))
   }
+
+  test("cloneAt from a source root holding , and ] reads back equal to the source") {
+    // the manifest records the clone's dirs as ABSOLUTE source paths; a
+    // string-built record split such a path at the comma and the bracket
+    val src = s"${newRoot()}/a,b]c"
+    Versioned.commitAppendClustered(spark, src,
+      (1L to 40L).map(i => (i, s"s$i")).toDF("id", "s"), "id", 4)
+    Versioned.commitDeleteMOR(spark, src, col("id") === 7L)
+    val want = Versioned.readAt(spark, src, 2).as[(Long, String)].collect().sorted.toSeq
+    assert(want.size == 39)
+    val dst = s"${newRoot()}_clone"
+    assert(Versioned.cloneAt(spark, src, dst, 2) == 1)
+    assert(Versioned.manifest(spark, dst, 1).forall(_.startsWith(s"$src/data/")))
+    assert(Versioned.readAt(spark, dst, 1).as[(Long, String)].collect().sorted.toSeq == want)
+    assert(Versioned.countAt(spark, dst, 1) == 39)
+  }
 }

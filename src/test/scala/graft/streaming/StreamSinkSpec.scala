@@ -66,4 +66,14 @@ class StreamSinkSpec extends AnyFunSuite {
       maxFilesPerTrigger = Some(1)))
     assert(day3 == batchAll)
   }
+
+  test("GRAFT_STREAM_SHUFFLE_PARTITIONS: a positive integer, or a failure naming it") {
+    assert(StreamSink.shufflePartitionsOverride(None).isEmpty)
+    assert(StreamSink.shufflePartitionsOverride(Some(" 12 ")).contains(12))
+    for (bad <- Seq("", "eight", "0", "-3", "1.5")) {
+      val e = intercept[IllegalArgumentException](
+        StreamSink.shufflePartitionsOverride(Some(bad)))
+      assert(e.getMessage.contains("GRAFT_STREAM_SHUFFLE_PARTITIONS"), bad)
+    }
+  }
 }
